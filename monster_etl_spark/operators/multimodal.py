@@ -90,28 +90,70 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _chunked_media_yield(pdf, encode_one, chunk=512):
-    """Yield per-chunk (media_id, content) frames from one Arrow batch of
-    (media_id, text). One 10k-doc batch yielded as a single pandas frame
-    holds every encoded blob live through serialization and stalls the
-    chained-Python-stage pipeline (round-7 sf10 finding: ~30% core
-    utilization on the GIF tier); small output batches pipeline smoothly
-    and keep worker memory flat. ``encode_one`` takes (media_id, text)."""
-    import pandas as pd
+def _encode_worker(encode_one):
+    """Adapter worker: (media_id, text) batches -> (media_id, content)
+    with ``content = encode_one(media_id, text)`` per row.
 
-    mids = pdf["media_id"].astype("int64")
-    texts = list(pdf["text"])
-    for lo in range(0, len(texts), chunk):
-        sl = mids.iloc[lo : lo + chunk]
-        yield pd.DataFrame(
-            {
-                "media_id": sl,
-                "content": [
-                    encode_one(int(m), t)
-                    for m, t in zip(sl, texts[lo : lo + chunk])
-                ],
-            }
-        )
+    Output is yielded in 512-row chunks: one 10k-doc batch yielded as a
+    single pandas frame holds every encoded blob live through
+    serialization and stalls the chained-Python-stage pipeline (round-7
+    sf10 finding: ~30% core utilization on the GIF tier); small output
+    batches pipeline smoothly and keep worker memory flat.
+
+    The returned ``_worker`` references no module-level engine name (the
+    chunk size is a local, pandas is imported inside), so cloudpickle
+    ships it and ``encode_one`` by value and Python workers never import
+    this package. ``encode_one`` must keep the same invariant."""
+
+    def _worker(batches):
+        import pandas as pd
+
+        CHUNK = 512
+        for pdf in batches:
+            mids = pdf["media_id"].astype("int64")
+            texts = list(pdf["text"])
+            for lo in range(0, len(texts), CHUNK):
+                sl = mids.iloc[lo : lo + CHUNK]
+                yield pd.DataFrame(
+                    {
+                        "media_id": sl,
+                        "content": [
+                            encode_one(int(m), t)
+                            for m, t in zip(sl, texts[lo : lo + CHUNK])
+                        ],
+                    }
+                )
+
+    return _worker
+
+
+def _profile_worker(profile_fn, fields):
+    """Header-profiler worker: (media_id, content) batches -> media_id,
+    one column per name in ``fields`` (``profile_fn(blob)`` is a dict or
+    None) and a ``profiled`` flag. Null or unparseable blobs profile as
+    ``profiled=false`` with null fields.
+
+    Like :func:`_encode_worker`, the returned ``_worker`` references no
+    module-level engine name, so cloudpickle ships it and ``profile_fn``
+    by value and Python workers never import this package."""
+
+    def _worker(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = {"media_id": pdf["media_id"].astype("int64")}
+            cols = {k: [] for k in fields}
+            flags = []
+            for c in pdf["content"]:
+                p = profile_fn(c) if c is not None else None
+                flags.append(p is not None)
+                for k in fields:
+                    cols[k].append(p.get(k) if p is not None else None)
+            rows.update(cols)
+            rows["profiled"] = flags
+            yield pd.DataFrame(rows)
+
+    return _worker
 
 
 def _cpu_spread(documents: DataFrame) -> DataFrame:
@@ -146,13 +188,21 @@ def _cpu_spread(documents: DataFrame) -> DataFrame:
     return documents.repartition(target)
 
 
-def _doc_media_df(documents: DataFrame, worker) -> DataFrame:
-    """The shared adapter plan shape: spread the lightweight (media_id,
-    text) projection (see ``_cpu_spread``), then run the codec worker as
-    one narrow ``mapInPandas`` producing the binary content column."""
+def _spread_text(documents: DataFrame) -> DataFrame:
+    """The (media_id, text) projection every adapter consumes, spread
+    across the cores (see ``_cpu_spread``)."""
     return _cpu_spread(
         documents.select(F.col("doc_id").alias("media_id"), F.col("text"))
-    ).mapInPandas(worker, schema="media_id long, content binary")
+    )
+
+
+def _doc_media_df(documents: DataFrame, worker) -> DataFrame:
+    """The shared adapter plan shape: the spread text projection, then
+    the codec worker as one narrow ``mapInPandas`` producing the binary
+    content column."""
+    return _spread_text(documents).mapInPandas(
+        worker, schema="media_id long, content binary"
+    )
 
 
 def fused_media_stats(documents: DataFrame, media_worker, stats_worker, schema) -> DataFrame:
@@ -173,9 +223,7 @@ def fused_media_stats(documents: DataFrame, media_worker, stats_worker, schema) 
     def _fused(batches):
         yield from stats_worker(media_worker(batches))
 
-    return _cpu_spread(
-        documents.select(F.col("doc_id").alias("media_id"), F.col("text"))
-    ).mapInPandas(_fused, schema=schema)
+    return _spread_text(documents).mapInPandas(_fused, schema=schema)
 
 
 def _fake_decode(content: bytes) -> tuple[int, int]:
@@ -717,16 +765,9 @@ def _png_media_worker(width: int = 32, interlaced: bool = False):
     from monster_etl_spark.operators.png import _build_png_codec
 
     encode_local = _build_png_codec()["encode_gray8"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf, lambda _m, t: encode_local(bytes(t, "utf-8"), width, interlaced)
-            )
-
-    return _worker
+    return _encode_worker(
+        lambda _m, t: encode_local(bytes(t, "utf-8"), width, interlaced)
+    )
 
 
 def documents_as_jpeg_media(
@@ -805,29 +846,10 @@ def _jpeg_profile_worker():
     contract. Unparseable blobs profile as ``profiled=false`` nulls."""
     from monster_etl_spark.operators.jpeg import jpeg_header_profile_fn
 
-    profile_local = jpeg_header_profile_fn()
-    fields = (
+    return _profile_worker(jpeg_header_profile_fn(), (
         "sof_marker", "width", "height", "n_quant_tables", "table_sum",
         "restart_interval", "scaled_percent", "quality_estimate",
-    )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
+    ))
 
 
 def audio_header_profile_fn():
@@ -907,16 +929,11 @@ def _mixed_audio_media_worker(sample_rate: int = 16000):
     flac_local = _build_flac_codec()["encode_pcm16"]
     sr = sample_rate
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda m, t: (wav_local if m % 2 == 0 else flac_local)(
-                    [(v - 128) * 256 for v in bytes(t, "utf-8")], sr
-                ),
-            )
-
-    return _worker
+    return _encode_worker(
+        lambda m, t: (wav_local if m % 2 == 0 else flac_local)(
+            [(v - 128) * 256 for v in bytes(t, "utf-8")], sr
+        )
+    )
 
 
 def _mp4_media_worker():
@@ -957,11 +974,7 @@ def _mp4_media_worker():
             write_mehd=(m % 8 == 3),
         )
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, _one)
-
-    return _worker
+    return _encode_worker(_one)
 
 
 def _mp4_profile_worker():
@@ -969,31 +982,12 @@ def _mp4_profile_worker():
     ``mp4.mp4_box_profile_fn`` for the field contract)."""
     from monster_etl_spark.operators.mp4 import mp4_box_profile_fn
 
-    profile_local = mp4_box_profile_fn()
-    fields = (
+    return _profile_worker(mp4_box_profile_fn(), (
         "major_brand", "timescale", "duration_ms", "n_tracks",
         "video_codec", "video_width", "video_height", "audio_codec",
         "audio_channels", "audio_sample_rate", "mdat_bytes",
         "fragmented", "n_fragments", "frag_samples",
-    )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
+    ))
 
 
 def _mp3_media_worker():
@@ -1020,11 +1014,7 @@ def _mp3_media_worker():
             xing={2: "xing", 4: "info"}.get(m % 5),
         )
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, _one)
-
-    return _worker
+    return _encode_worker(_one)
 
 
 def _mp3_profile_worker():
@@ -1032,30 +1022,11 @@ def _mp3_profile_worker():
     ``mp3.mp3_frame_profile_fn`` for the field contract)."""
     from monster_etl_spark.operators.mp3 import mp3_frame_profile_fn
 
-    profile_local = mp3_frame_profile_fn()
-    fields = (
+    return _profile_worker(mp3_frame_profile_fn(), (
         "version", "layer", "bitrate_kbps", "sample_rate", "channel_mode",
         "n_frames", "cbr", "duration_ms", "id3_bytes", "stream_bytes",
         "vbr_header",
-    )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
+    ))
 
 
 def _ogg_media_worker():
@@ -1078,11 +1049,7 @@ def _ogg_media_worker():
             pre_skip=312 + (m % 5) * 24,
         )
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, _one)
-
-    return _worker
+    return _encode_worker(_one)
 
 
 def _ogg_profile_worker():
@@ -1090,30 +1057,11 @@ def _ogg_profile_worker():
     ``ogg.ogg_page_profile_fn`` for the field contract)."""
     from monster_etl_spark.operators.ogg import ogg_page_profile_fn
 
-    profile_local = ogg_page_profile_fn()
-    fields = (
+    return _profile_worker(ogg_page_profile_fn(), (
         "codec", "n_pages", "n_streams", "channels", "input_rate",
         "pre_skip", "last_granule", "duration_ms", "eos_seen",
         "body_bytes",
-    )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
+    ))
 
 
 def _webm_media_worker():
@@ -1147,11 +1095,7 @@ def _webm_media_worker():
             unknown_segment_size=(m % 5 == 0),
         )
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, _one)
-
-    return _worker
+    return _encode_worker(_one)
 
 
 def _webm_profile_worker():
@@ -1159,59 +1103,21 @@ def _webm_profile_worker():
     ``webm.webm_profile_fn`` for the field contract)."""
     from monster_etl_spark.operators.webm import webm_profile_fn
 
-    profile_local = webm_profile_fn()
-    fields = (
+    return _profile_worker(webm_profile_fn(), (
         "doc_type", "doc_type_version", "timestamp_scale", "duration_ms",
         "n_tracks", "video_codec", "video_width", "video_height",
         "audio_codec", "audio_channels", "audio_sample_rate",
         "n_clusters", "block_bytes",
-    )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
+    ))
 
 
 def _audio_profile_worker():
     """Worker builder for the audio-container profiler (see
     ``audio_header_profile_fn`` for the field contract)."""
-    profile_local = audio_header_profile_fn()
-    fields = (
+    return _profile_worker(audio_header_profile_fn(), (
         "container", "wav_format", "sample_rate", "n_channels",
         "bits_per_sample", "n_samples", "duration_ms",
-    )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
+    ))
 
 
 def _jpeg_media_worker(blocks_per_row: int = 8, progressive: bool = False):
@@ -1286,16 +1192,7 @@ def _gif_media_worker(width: int = 32):
     from monster_etl_spark.operators.gif import _build_gif_codec
 
     encode_local = _build_gif_codec()["encode_gray8"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf, lambda _m, t: encode_local(bytes(t, "utf-8"), width)
-            )
-
-    return _worker
+    return _encode_worker(lambda _m, t: encode_local(bytes(t, "utf-8"), width))
 
 
 def documents_as_media(documents: DataFrame) -> DataFrame:
@@ -1622,21 +1519,15 @@ def _dib_avi_media_worker(frame_bytes: int = 16, fps: int = 10):
     avi_encode_dib_local = _build_avi_codec()["encode_dib"]
     fb = frame_bytes
 
-    def _worker(batches):
-        import pandas as pd
+    def doc_to_avi(_m, text):
+        data = bytes(text, "utf-8")
+        per = 2 * fb  # 2 rows per frame
+        n_frames = max(1, -(-len(data) // per))
+        padded = data.ljust(n_frames * per, b"\x00")
+        frames = [padded[k * per : (k + 1) * per] for k in range(n_frames)]
+        return avi_encode_dib_local(frames, fb, 2, fps)
 
-        def doc_to_avi(text):
-            data = bytes(text, "utf-8")
-            per = 2 * fb  # 2 rows per frame
-            n_frames = max(1, -(-len(data) // per))
-            padded = data.ljust(n_frames * per, b"\x00")
-            frames = [padded[k * per : (k + 1) * per] for k in range(n_frames)]
-            return avi_encode_dib_local(frames, fb, 2, fps)
-
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, lambda _m, t: doc_to_avi(t))
-
-    return _worker
+    return _encode_worker(doc_to_avi)
 
 
 AUDIO_STATS_SCHEMA = T.StructType(
@@ -1754,19 +1645,11 @@ def _wav_media_worker(sample_rate: int = 16000):
     from monster_etl_spark.operators.wav import _build_wav_codec
 
     encode_local = _build_wav_codec()["encode_pcm16"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(
-                    [(v - 128) * 256 for v in bytes(t, "utf-8")], sample_rate
-                ),
-            )
-
-    return _worker
+    return _encode_worker(
+        lambda _m, t: encode_local(
+            [(v - 128) * 256 for v in bytes(t, "utf-8")], sample_rate
+        )
+    )
 
 
 def documents_as_g711_media(
@@ -1786,19 +1669,11 @@ def _g711_media_worker(law: str = "ulaw", sample_rate: int = 8000):
     from monster_etl_spark.operators.wav import _build_wav_codec
 
     encode_local = _build_wav_codec()["encode_g711"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(
-                    [(v - 80) * 301 for v in bytes(t, "utf-8")], law, sample_rate
-                ),
-            )
-
-    return _worker
+    return _encode_worker(
+        lambda _m, t: encode_local(
+            [(v - 80) * 301 for v in bytes(t, "utf-8")], law, sample_rate
+        )
+    )
 
 
 def documents_as_adpcm_media(
@@ -1827,25 +1702,17 @@ def _adpcm_media_worker(
     from monster_etl_spark.operators.wav import _build_wav_codec
 
     encode_local = _build_wav_codec()["encode_adpcm"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            # truncate CHARACTERS first, then encode: the DuckDB oracle
-            # slices with substr(text, 1, n) (character semantics), and
-            # a byte-prefix slice of non-ASCII text would both diverge
-            # from it and risk splitting a multi-byte code point
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(
-                    [(v - 128) * 256 for v in bytes(t[:max_samples], "utf-8")],
-                    sample_rate,
-                    block_bytes,
-                ),
-            )
-
-    return _worker
+    # truncate CHARACTERS first, then encode: the DuckDB oracle slices
+    # with substr(text, 1, n) (character semantics), and a byte-prefix
+    # slice of non-ASCII text would both diverge from it and risk
+    # splitting a multi-byte code point
+    return _encode_worker(
+        lambda _m, t: encode_local(
+            [(v - 128) * 256 for v in bytes(t[:max_samples], "utf-8")],
+            sample_rate,
+            block_bytes,
+        )
+    )
 
 
 def documents_as_tiff_media(
@@ -1866,17 +1733,9 @@ def _tiff_media_worker(width: int = 32, rows_per_strip: int = 8):
     from monster_etl_spark.operators.tiff import _build_tiff_codec
 
     encode_local = _build_tiff_codec()["encode_gray8"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(bytes(t, "utf-8"), width, rows_per_strip, 5, 2),
-            )
-
-    return _worker
+    return _encode_worker(
+        lambda _m, t: encode_local(bytes(t, "utf-8"), width, rows_per_strip, 5, 2)
+    )
 
 
 def documents_as_bmp_media(documents: DataFrame, width: int = 32) -> DataFrame:
@@ -1894,17 +1753,9 @@ def _bmp_media_worker(width: int = 32):
     from monster_etl_spark.operators.bmp import _build_bmp_codec
 
     encode_local = _build_bmp_codec()["encode_gray8"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda m, t: encode_local(bytes(t, "utf-8"), width, bool(m % 2)),
-            )
-
-    return _worker
+    return _encode_worker(
+        lambda m, t: encode_local(bytes(t, "utf-8"), width, bool(m % 2))
+    )
 
 
 def documents_as_webp_media(documents: DataFrame, width: int = 32) -> DataFrame:
@@ -1924,25 +1775,16 @@ def _webp_media_worker(width: int = 32, static_codes: bool = True):
 
     encode_local = _build_webp_codec()["encode_gray8"]
     modes = ("lz77", "predictor", "palette")
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                # static_codes: the fixed build-time prefix plans — the
-                # per-image Huffman+description floor collapses to an
-                # array replay, and every blob shares the decoder's
-                # memoized description parse (same pixels either way).
-                # Adaptive per-image codes stay first-class via their own
-                # registry row (multimodal_webp_adaptive_stats).
-                lambda m, t: encode_local(
-                    bytes(t, "utf-8"), width, modes[m % 3], static_codes
-                ),
-            )
-
-    return _worker
+    # static_codes: the fixed build-time prefix plans — the per-image
+    # Huffman+description floor collapses to an array replay, and every
+    # blob shares the decoder's memoized description parse (same pixels
+    # either way). Adaptive per-image codes stay first-class via their
+    # own registry row (multimodal_webp_adaptive_stats).
+    return _encode_worker(
+        lambda m, t: encode_local(
+            bytes(t, "utf-8"), width, modes[m % 3], static_codes
+        )
+    )
 
 
 def documents_as_flac_media(
@@ -1962,19 +1804,11 @@ def _flac_media_worker(sample_rate: int = 16000):
     from monster_etl_spark.operators.flac import _build_flac_codec
 
     encode_local = _build_flac_codec()["encode_pcm16"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(
-                    [(v - 128) * 256 for v in bytes(t, "utf-8")], sample_rate, 1
-                ),
-            )
-
-    return _worker
+    return _encode_worker(
+        lambda _m, t: encode_local(
+            [(v - 128) * 256 for v in bytes(t, "utf-8")], sample_rate, 1
+        )
+    )
 
 
 def audio_window_spans(

@@ -422,7 +422,7 @@ def _with_unit(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
     re-running the norm |vec| times per row. ``zip_with`` against
     ``array_repeat(norm, size)`` keeps the norm in argument position —
     evaluated once per row no matter how projections collapse."""
-    vnorm = F.expr(_norm_sql(_as_double_sql(vec_col)))
+    vnorm = F.expr(_norm_sql(_as_double_sql(_qid(vec_col))))
     return df.withColumn(
         out_col,
         F.when(
@@ -1829,14 +1829,15 @@ def covariance_moments(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     aggregate; see ``queries.similarity_queries.embedding_covariance``
     for the hash-matched SQL twin. Returns (dim_i, dim_j, cov) 1-based.
     """
+    v = _qid(vec_col)
     pairs = emb.select(
         F.explode(
             F.expr(
-                f"""flatten(transform(sequence(1, size({vec_col})), i ->
-                     transform(sequence(i, size({vec_col})), j ->
+                f"""flatten(transform(sequence(1, size({v})), i ->
+                     transform(sequence(i, size({v})), j ->
                        struct(i AS i, j AS j,
-                         CAST(CAST(element_at({vec_col}, i) AS DECIMAL(18,9))
-                              * CAST(element_at({vec_col}, j) AS DECIMAL(18,9))
+                         CAST(CAST(element_at({v}, i) AS DECIMAL(18,9))
+                              * CAST(element_at({v}, j) AS DECIMAL(18,9))
                               AS DECIMAL(38,18)) AS xy))))"""
             )
         ).alias("p")

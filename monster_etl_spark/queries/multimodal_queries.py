@@ -16,21 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monster_etl_spark.operators.multimodal import (
-    documents_as_adpcm_media,
-    documents_as_animated_gif_media,
-    documents_as_bmp_media,
-    documents_as_dib_avi_media,
-    documents_as_flac_media,
-    documents_as_webp_media,
-    documents_as_g711_media,
-    documents_as_gif_media,
-    documents_as_jpeg_media,
     documents_as_media,
-    documents_as_mjpeg_media,
-    documents_as_png_media,
-    documents_as_tiff_media,
-    documents_as_wav_media,
-    extract_audio_stats,
     fused_media_stats,
     AUDIO_STATS_SCHEMA,
     PIXEL_STATS_SCHEMA,
@@ -62,10 +48,7 @@ from monster_etl_spark.operators.multimodal import (
     _video_frame_stats_worker,
     _wav_media_worker,
     _webp_media_worker,
-    extract_gif_frame_stats,
     extract_image_features,
-    extract_pixel_stats,
-    extract_video_frame_stats,
     resize_images,
 )
 from monster_etl_spark.queries import QuerySpec, load
@@ -334,6 +317,38 @@ FROM spans
 _PNG_W = 32
 
 
+def _pixel_stats_query(documents: DataFrame, media_worker) -> DataFrame:
+    """documents -> ``media_worker`` blobs -> decoded pixel stats in one
+    fused ``mapInPandas``; the shared tail of every image round-trip
+    query. The JVM-side 6 dp round is an identity on the worker's
+    exactly rounded means (see ``_pixel_stats_worker``)."""
+    return fused_media_stats(
+        documents, media_worker, _pixel_stats_worker(), PIXEL_STATS_SCHEMA
+    ).select(
+        "media_id", "width", "height",
+        F.round("mean_intensity", 6).alias("mean_intensity"),
+        "min_intensity", "max_intensity", "decoded",
+    )
+
+
+def _audio_stats_query(
+    documents: DataFrame, media_worker, codec: str = "wav"
+) -> DataFrame:
+    """documents -> ``media_worker`` clips -> decoded sample stats in one
+    fused ``mapInPandas`` (``codec`` picks the decoder, see
+    ``_audio_stats_worker``); the shared tail of every audio round-trip
+    query, with the float columns rounded JVM-side to 6 dp."""
+    return fused_media_stats(
+        documents, media_worker, _audio_stats_worker(codec), AUDIO_STATS_SCHEMA
+    ).select(
+        "media_id", "sample_rate", "n_channels", "n_samples",
+        F.round("duration_sec", 6).alias("duration_sec"),
+        "peak_abs",
+        F.round("rms", 6).alias("rms"),
+        "decoded",
+    )
+
+
 def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG encode -> decode round-trip, fully distributed: each
     document's UTF-8 bytes become an 8-bit grayscale PNG (born on
@@ -342,13 +357,8 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from character code points (the corpus is ASCII, so code point ==
     pixel byte; zero-padding to whole rows is mirrored on both sides) —
     a hash-match proves the codec path decodes actual pixels."""
-    return fused_media_stats(
-        load(spark, sf_dir, "documents"),
-        _png_media_worker(width=_PNG_W), _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+    return _pixel_stats_query(
+        load(spark, sf_dir, "documents"), _png_media_worker(width=_PNG_W)
     )
 
 
@@ -389,13 +399,9 @@ def multimodal_png_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFra
     Interlacing is a pure reordering — lossless — so PNG_PIXEL_SQL
     applies VERBATIM; a hash-match proves the pass geometry, per-pass
     unfiltering and scatter all reconstruct exact pixels."""
-    return fused_media_stats(
+    return _pixel_stats_query(
         load(spark, sf_dir, "documents"),
-        _png_media_worker(width=_PNG_W, interlaced=True), _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+        _png_media_worker(width=_PNG_W, interlaced=True),
     )
 
 
@@ -406,13 +412,8 @@ def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query's oracle is PNG_PIXEL_SQL VERBATIM — a hash-match proves
     a second, unrelated codec (LZW vs zlib inflate) recovers identical
     pixels from independently-encoded blobs."""
-    return fused_media_stats(
-        load(spark, sf_dir, "documents"),
-        _gif_media_worker(width=_PNG_W), _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+    return _pixel_stats_query(
+        load(spark, sf_dir, "documents"), _gif_media_worker(width=_PNG_W)
     )
 
 
@@ -428,13 +429,9 @@ def multimodal_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/jpeg.py) must recover the EXACT pixels for the analytic
     oracle to hash-match: block count ceil(n/8)*8, mean = sum(code
     points)/blocks, min 0 iff zero-padding blocks exist."""
-    return fused_media_stats(
+    return _pixel_stats_query(
         load(spark, sf_dir, "documents"),
-        _jpeg_media_worker(blocks_per_row=_JPEG_BPR), _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+        _jpeg_media_worker(blocks_per_row=_JPEG_BPR),
     )
 
 
@@ -448,13 +445,9 @@ def multimodal_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataF
     first with EOB runs, AC refinement) and must recover the EXACT same
     pixels, so JPEG_PIXEL_SQL applies verbatim; a hash-match proves the
     progressive path decodes for real."""
-    return fused_media_stats(
+    return _pixel_stats_query(
         load(spark, sf_dir, "documents"),
-        _jpeg_media_worker(blocks_per_row=_JPEG_BPR, progressive=True), _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+        _jpeg_media_worker(blocks_per_row=_JPEG_BPR, progressive=True),
     )
 
 
@@ -850,15 +843,8 @@ def multimodal_wav_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     peak and RMS. The oracle computes identical stats analytically from
     code points — exact integer square sums keep the one float step
     (sqrt) IEEE-identical, so this hash-matches like the image trio."""
-    return fused_media_stats(
-        load(spark, sf_dir, "documents"),
-        _wav_media_worker(sample_rate=_WAV_SR), _audio_stats_worker(), AUDIO_STATS_SCHEMA,
-    ).select(
-        "media_id", "sample_rate", "n_channels", "n_samples",
-        F.round("duration_sec", 6).alias("duration_sec"),
-        "peak_abs",
-        F.round("rms", 6).alias("rms"),
-        "decoded",
+    return _audio_stats_query(
+        load(spark, sf_dir, "documents"), _wav_media_worker(sample_rate=_WAV_SR)
     )
 
 
@@ -892,13 +878,8 @@ def multimodal_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless, so PNG_PIXEL_SQL applies VERBATIM — a hash match proves
     IFD parsing, strip assembly, the LZW variant and the predictor all
     reconstruct exact pixels."""
-    return fused_media_stats(
-        load(spark, sf_dir, "documents"),
-        _tiff_media_worker(width=_PNG_W), _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+    return _pixel_stats_query(
+        load(spark, sf_dir, "documents"), _tiff_media_worker(width=_PNG_W)
     )
 
 
@@ -911,13 +892,8 @@ def multimodal_bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to exact pixels. Same pixel layout as the PNG adapter and BMP
     is lossless, so PNG_PIXEL_SQL applies VERBATIM; a hash match over
     the mixed corpus proves BOTH the raw and run-length paths."""
-    return fused_media_stats(
-        load(spark, sf_dir, "documents"),
-        _bmp_media_worker(width=_PNG_W), _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+    return _pixel_stats_query(
+        load(spark, sf_dir, "documents"), _bmp_media_worker(width=_PNG_W)
     )
 
 
@@ -934,13 +910,8 @@ def multimodal_webp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform inverses. VP8L is lossless, so PNG_PIXEL_SQL applies
     VERBATIM — a hash match over the mixed corpus proves all three
     decode paths reconstruct exact pixels."""
-    return fused_media_stats(
-        load(spark, sf_dir, "documents"),
-        _webp_media_worker(width=_PNG_W), _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+    return _pixel_stats_query(
+        load(spark, sf_dir, "documents"), _webp_media_worker(width=_PNG_W)
     )
 
 
@@ -955,13 +926,8 @@ def multimodal_webp_adaptive_stats(spark: SparkSession, sf_dir: str) -> DataFram
     static query (multimodal_webp_pixel_stats) stays unmixed; lossless
     either way, so the PNG oracle applies with the same sample filter."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 16 == 0)
-    return fused_media_stats(
-        docs, _webp_media_worker(width=_PNG_W, static_codes=False),
-        _pixel_stats_worker(), PIXEL_STATS_SCHEMA,
-    ).select(
-        "media_id", "width", "height",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        "min_intensity", "max_intensity", "decoded",
+    return _pixel_stats_query(
+        docs, _webp_media_worker(width=_PNG_W, static_codes=False)
     )
 
 
@@ -979,16 +945,10 @@ def multimodal_flac_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole Rice/predictor/CRC path reconstructs every sample exactly
     (the MD5 check inside the decoder would turn any slip into
     decoded=false, which the oracle would catch as a value mismatch)."""
-    return fused_media_stats(
+    return _audio_stats_query(
         load(spark, sf_dir, "documents"),
         _flac_media_worker(sample_rate=_WAV_SR),
-        _audio_stats_worker(codec="flac"), AUDIO_STATS_SCHEMA,
-    ).select(
-        "media_id", "sample_rate", "n_channels", "n_samples",
-        F.round("duration_sec", 6).alias("duration_sec"),
-        "peak_abs",
-        F.round("rms", 6).alias("rms"),
-        "decoded",
+        codec="flac",
     )
 
 
@@ -997,15 +957,9 @@ _G711_SR = 8000
 
 def _g711_stats_query(law: str):
     def _q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return fused_media_stats(
+        return _audio_stats_query(
             load(spark, sf_dir, "documents"),
-            _g711_media_worker(law=law, sample_rate=_G711_SR), _audio_stats_worker(), AUDIO_STATS_SCHEMA,
-        ).select(
-            "media_id", "sample_rate", "n_channels", "n_samples",
-            F.round("duration_sec", 6).alias("duration_sec"),
-            "peak_abs",
-            F.round("rms", 6).alias("rms"),
-            "decoded",
+            _g711_media_worker(law=law, sample_rate=_G711_SR),
         )
 
     return _q
@@ -1109,20 +1063,13 @@ def multimodal_adpcm_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     89-entry step-table recurrence. The oracle replays the IDENTICAL
     integer recurrence in a recursive CTE — a hash match proves a
     STATEFUL codec end-to-end, not just a per-sample mapping."""
-    return fused_media_stats(
+    return _audio_stats_query(
         load(spark, sf_dir, "documents"),
         _adpcm_media_worker(
             sample_rate=_ADPCM_SR,
             block_bytes=_ADPCM_BLOCK_BYTES,
             max_samples=_ADPCM_MAX,
         ),
-        _audio_stats_worker(), AUDIO_STATS_SCHEMA,
-    ).select(
-        "media_id", "sample_rate", "n_channels", "n_samples",
-        F.round("duration_sec", 6).alias("duration_sec"),
-        "peak_abs",
-        F.round("rms", 6).alias("rms"),
-        "decoded",
     )
 
 

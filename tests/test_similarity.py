@@ -369,6 +369,25 @@ def test_covariance_moments_symmetric_psd(spark, sf_dir):
     assert cov.diagonal().min() > 0
 
 
+def test_special_char_vector_column_matches_default(spark, sf_dir):
+    """The parsed-SQL fast paths quote ``vec_col``: a column named
+    ``emb-vec`` (unparseable as a bare SQL identifier) must give the same
+    rows as ``embedding``, both in the unit normalization and in the
+    covariance pair expansion."""
+    emb = load(spark, sf_dir, "embeddings")
+    renamed = emb.withColumnRenamed("embedding", "emb-vec")
+
+    def cov_rows(df, col):
+        return sorted(map(tuple, sim.covariance_moments(df, col).collect()))
+
+    def unit_rows(df, col):
+        out = sim._with_unit(df, col, "u").select("vec_id", "u")
+        return sorted(map(tuple, out.collect()))
+
+    assert cov_rows(renamed, "emb-vec") == cov_rows(emb, "embedding")
+    assert unit_rows(renamed, "emb-vec") == unit_rows(emb, "embedding")
+
+
 def test_pq_recall_vs_brute_force(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id % 50 == 0)

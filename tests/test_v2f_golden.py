@@ -15,10 +15,18 @@ nulls included.
 
 import glob
 import json
+import os
 
 import pytest
 
 REFERENCE_IT = "/root/reference/v2f/src/it/test-files"
+
+# the golden inputs live outside this repo; without them there is
+# nothing to compare, so say so instead of erroring on empty reads
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_IT),
+    reason=f"v2f reference test files absent: {REFERENCE_IT} does not exist",
+)
 
 # engine output layout now mirrors the reference's nested paths exactly
 TABLES = {
