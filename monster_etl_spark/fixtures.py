@@ -23,6 +23,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from monster_etl_spark.pyworkers import map_in_pandas
+
 _M64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
@@ -114,6 +116,6 @@ def mog_embeddings(
             )
 
     parts = partitions or max(1, min(64, n // 50_000) or 1)
-    return spark.range(0, n, 1, parts).mapInPandas(
-        _gen, schema="vec_id long, embedding array<float>, label int"
+    return map_in_pandas(
+        spark.range(0, n, 1, parts), _gen, "vec_id long, embedding array<float>, label int"
     )

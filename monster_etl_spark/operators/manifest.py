@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from monster_etl_spark.localrel import local_df
 from monster_etl_spark.fsutil import FileStat, list_files
+from monster_etl_spark.pyworkers import map_in_pandas
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -127,8 +128,8 @@ _FILES_SCHEMA = "file: string, file_size: long, file_mtime: long"
 def _scan_files(spark: SparkSession, files: list[FileStat], columns: list[str]) -> DataFrame:
     files_df = local_df(spark, [(f.path, f.size, f.mtime) for f in files], _FILES_SCHEMA)
     # one small task per file batch; footer-only IO
-    return files_df.repartition(min(len(files), 64)).mapInPandas(
-        _stats_scanner(list(columns)), MANIFEST_SCHEMA
+    return map_in_pandas(
+        files_df.repartition(min(len(files), 64)), _stats_scanner(list(columns)), MANIFEST_SCHEMA
     )
 
 
@@ -321,7 +322,7 @@ def build_bloom_manifest(
                     out.append((f, c, len(distinct), bytes(bits)))
             yield pd.DataFrame(out, columns=["file", "column", "n_distinct", "bloom"])
 
-    return files_df.repartition(min(len(files), 64)).mapInPandas(_scan, _BLOOM_SCHEMA)
+    return map_in_pandas(files_df.repartition(min(len(files), 64)), _scan, _BLOOM_SCHEMA)
 
 
 class BloomIndex:

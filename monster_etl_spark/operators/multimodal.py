@@ -60,6 +60,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from monster_etl_spark.operators.partitioning import spread
+from monster_etl_spark.pyworkers import map_in_pandas
+
 if TYPE_CHECKING:
     import pandas as pd
 
@@ -156,53 +159,31 @@ def _profile_worker(profile_fn, fields):
     return _worker
 
 
-def _cpu_spread(documents: DataFrame) -> DataFrame:
-    """Round-robin repartition a (media_id, text) projection to the
-    session's default parallelism before a codec ``mapInPandas`` stage.
+def _spread_text(documents: DataFrame) -> DataFrame:
+    """The (media_id, text) projection every adapter consumes, spread
+    across the cores before the first codec stage.
 
     Why: codec encode/decode is CPU-bound Python — per byte it costs
     10-100x a relational scan — but Spark sizes file-scan partitions by
-    INPUT BYTES (``spark.sql.files.maxPartitionBytes``, tuned for
-    IO-bound scans). A small-on-disk documents table therefore lands in
-    one or two partitions, and because every codec stage downstream is a
-    narrow transformation (the invariant: blobs never shuffle), the whole
-    encode->decode pipeline inherits that width and runs on one core of a
-    32-core box. Spreading the lightweight TEXT projection (a few hundred
-    bytes/row) before the first mapInPandas costs one tiny shuffle of
-    pre-blob data, keeps the blobs-never-shuffle invariant (the binary
-    column is born AFTER this exchange and stays narrow), and gives every
-    downstream codec stage full-cluster width. On a real 100 TB media
-    corpus the scan itself yields ~800k partitions and this is a no-op in
-    spirit (repartition to max(defaultParallelism, current) never
-    shrinks); the guard matters exactly on the small-file tail — the
-    same reasoning as AQE's initialPartitionNum, applied to the narrow
-    CPU-bound path AQE cannot see."""
-    sc = documents.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        current = documents.rdd.getNumPartitions()
-    except Exception:
-        current = 1
-    if current >= target:
-        return documents
-    return documents.repartition(target)
+    INPUT BYTES, so a small-on-disk documents table lands in one or two
+    partitions, and every codec stage downstream is narrow (the
+    invariant: blobs never shuffle) and inherits that width. Spreading
+    the lightweight TEXT projection costs one tiny shuffle of pre-blob
+    data (the binary column is born after this exchange); ``spread``
+    never shrinks, so a scan already wider than the cores is untouched."""
+    return spread(documents.select(F.col("doc_id").alias("media_id"), F.col("text")))
 
 
-def _spread_text(documents: DataFrame) -> DataFrame:
-    """The (media_id, text) projection every adapter consumes, spread
-    across the cores (see ``_cpu_spread``)."""
-    return _cpu_spread(
-        documents.select(F.col("doc_id").alias("media_id"), F.col("text"))
-    )
+def _media_map(media: DataFrame, worker, schema) -> DataFrame:
+    """A media extractor: only (media_id, content) crosses into Python."""
+    return map_in_pandas(media.select("media_id", "content"), worker, schema)
 
 
 def _doc_media_df(documents: DataFrame, worker) -> DataFrame:
     """The shared adapter plan shape: the spread text projection, then
     the codec worker as one narrow ``mapInPandas`` producing the binary
     content column."""
-    return _spread_text(documents).mapInPandas(
-        worker, schema="media_id long, content binary"
-    )
+    return map_in_pandas(_spread_text(documents), worker, "media_id long, content binary")
 
 
 def fused_media_stats(documents: DataFrame, media_worker, stats_worker, schema) -> DataFrame:
@@ -223,15 +204,7 @@ def fused_media_stats(documents: DataFrame, media_worker, stats_worker, schema) 
     def _fused(batches):
         yield from stats_worker(media_worker(batches))
 
-    return _spread_text(documents).mapInPandas(_fused, schema=schema)
-
-
-def _fake_decode(content: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for an image decode: 'dimensions' derived from
-    content length. Used only for content that is not a recognized image
-    container (see ``_header_dims``)."""
-    n = len(content)
-    return (n % 640) + 1, (n % 480) + 1
+    return map_in_pandas(_spread_text(documents), _fused, schema)
 
 
 def _header_dims_fn():
@@ -324,9 +297,7 @@ def _full_decode_fn():
     return full_decode
 
 
-def decode_image_batch(
-    batches: "Iterator[pd.DataFrame]", real_decode: bool = False
-) -> "Iterator[pd.DataFrame]":
+def _image_features_worker(real_decode: bool = False):
     """mapInPandas worker: binary content -> (dims + checksum) features.
     Default: header-parsed dimensions for PNG/JPEG/GIF content,
     deterministic fake dims otherwise. ``real_decode=True``: dimensions
@@ -337,30 +308,43 @@ def decode_image_batch(
 
     Batch shape: input columns (media_id, content); output matches
     IMAGE_FEATURES_SCHEMA. Pure per-row computation — safe to run on any
-    partitioning.
-    """
-    import pandas as pd
-    import zlib
-
+    partitioning. The header parser and decoders are captured closures,
+    so cloudpickle ships the worker by value."""
+    header_dims = _header_dims_fn()
     full_decode = _full_decode_fn() if real_decode else None
-    for pdf in batches:
-        contents = [bytes(c) for c in pdf["content"]]
-        if real_decode:
+
+    def _worker(batches):
+        import zlib
+
+        import pandas as pd
+
+        for pdf in batches:
+            contents = [bytes(c) for c in pdf["content"]]
             dims = []
             for c in contents:
-                d = full_decode(c)
-                dims.append((d[0], d[1]) if d else (_header_dims(c) or _fake_decode(c)))
-        else:
-            dims = [_header_dims(c) or _fake_decode(c) for c in contents]
-        yield pd.DataFrame(
-            {
-                "media_id": pdf["media_id"].astype("int64"),
-                "n_bytes": [len(c) for c in contents],
-                "width": [w for w, _ in dims],
-                "height": [h for _, h in dims],
-                "byte_crc": [zlib.crc32(c) for c in contents],
-            }
-        )
+                d = full_decode(c) if full_decode is not None else None
+                n = len(c)
+                dims.append(
+                    (d[0], d[1]) if d else header_dims(c) or ((n % 640) + 1, (n % 480) + 1)
+                )
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"].astype("int64"),
+                    "n_bytes": [len(c) for c in contents],
+                    "width": [w for w, _ in dims],
+                    "height": [h for _, h in dims],
+                    "byte_crc": [zlib.crc32(c) for c in contents],
+                }
+            )
+
+    return _worker
+
+
+def decode_image_batch(
+    batches: "Iterator[pd.DataFrame]", real_decode: bool = False
+) -> "Iterator[pd.DataFrame]":
+    """The :func:`_image_features_worker` body as a plain function."""
+    return _image_features_worker(real_decode)(batches)
 
 
 def extract_image_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
@@ -372,83 +356,10 @@ def extract_image_features(media: DataFrame, real_decode: bool = False) -> DataF
     (the synthetic corpus is text bytes). ``real_decode=True`` routes to
     the FULL in-repo pixel decoders (PNG/JPEG/GIF/TIFF/BMP) and reports
     decoded dimensions, falling back to the deterministic fake dims only
-    for content no shipped codec can parse.
-
-    The worker function is a self-contained closure (the header parser is
-    NESTED, not a module reference) so cloudpickle ships it *by value* —
-    Python workers need neither this package on their path nor any import
-    beyond pandas/zlib. Module-level UDFs pickle by reference and break on
-    executors without the package installed.
-    """
-    if real_decode:
-        # the decode + header-parse closures are captured here (not
-        # referenced via the module) so cloudpickle ships them by value
-        full_decode = _full_decode_fn()
-        header_dims = _header_dims_fn()
-
-        def _worker_real(batches):
-            import zlib
-
-            import pandas as pd
-
-            for pdf in batches:
-                contents = [bytes(c) for c in pdf["content"]]
-                dims = []
-                for c in contents:
-                    d = full_decode(c)
-                    if d is not None:
-                        dims.append((d[0], d[1]))
-                    else:
-                        # same fallback chain as decode_image_batch: header
-                        # dims when the container is parseable, else the
-                        # deterministic fake
-                        n = len(c)
-                        dims.append(
-                            header_dims(c)
-                            or ((n % 640) + 1, (n % 480) + 1)
-                        )
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"].astype("int64"),
-                        "n_bytes": [len(c) for c in contents],
-                        "width": [w for w, _ in dims],
-                        "height": [h for _, h in dims],
-                        "byte_crc": [zlib.crc32(c) for c in contents],
-                    }
-                )
-
-        return media.select("media_id", "content").mapInPandas(
-            _worker_real, schema=IMAGE_FEATURES_SCHEMA
-        )
-
-    # captured by value via the factory (see _header_dims_fn): the closure
-    # stays self-contained, no package needed on executors
-    header_dims = _header_dims_fn()
-
-    def _worker(batches):
-        import zlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            contents = [bytes(c) for c in pdf["content"]]
-            dims = [
-                header_dims(c) or ((len(c) % 640) + 1, (len(c) % 480) + 1)
-                for c in contents
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "n_bytes": [len(c) for c in contents],
-                    "width": [w for w, _ in dims],
-                    "height": [h for _, h in dims],
-                    "byte_crc": [zlib.crc32(c) for c in contents],
-                }
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        _worker, schema=IMAGE_FEATURES_SCHEMA
-    )
+    for content no shipped codec can parse. The worker ships by value, so
+    Python workers need neither this package nor any import beyond
+    pandas/zlib."""
+    return _media_map(media, _image_features_worker(real_decode), IMAGE_FEATURES_SCHEMA)
 
 
 def png_encode_gray8(pixels: bytes, width: int) -> bytes:
@@ -580,9 +491,7 @@ def extract_pixel_stats(media: DataFrame) -> DataFrame:
     ``operators/jpeg._build_jpeg_codec`` — both ship by value) like
     ``extract_image_features``.
     """
-    return media.select("media_id", "content").mapInPandas(
-        _pixel_stats_worker(), schema=PIXEL_STATS_SCHEMA
-    )
+    return _media_map(media, _pixel_stats_worker(), PIXEL_STATS_SCHEMA)
 
 
 def _pixel_stats_worker():
@@ -1257,9 +1166,7 @@ def resize_images(
                     }
                 )
 
-        return media.select("media_id", "content").mapInPandas(
-            _worker_real, schema="media_id long, content binary, width int, height int"
-        )
+        return _media_map(media, _worker_real, "media_id long, content binary, width int, height int")
 
     def _worker(batches):
         import pandas as pd
@@ -1279,9 +1186,7 @@ def resize_images(
                 }
             )
 
-    return media.select("media_id", "content").mapInPandas(
-        _worker, schema="media_id long, content binary, width int, height int"
-    )
+    return _media_map(media, _worker, "media_id long, content binary, width int, height int")
 
 
 def frame_sample_ids(media: DataFrame, every_nth: int = 10) -> DataFrame:
@@ -1320,9 +1225,7 @@ def extract_video_frame_stats(media: DataFrame) -> DataFrame:
     codec is neither) yields one ``decoded=false`` row — the media-codec
     contract. Pure stdlib, no codec library; Arrow-batched
     ``mapInPandas``, blobs never shuffle."""
-    return media.select("media_id", "content").mapInPandas(
-        _video_frame_stats_worker(), schema=VIDEO_FRAME_SCHEMA
-    )
+    return _media_map(media, _video_frame_stats_worker(), VIDEO_FRAME_SCHEMA)
 
 
 def _video_frame_stats_worker():
@@ -1559,9 +1462,7 @@ def extract_audio_stats(media: DataFrame, codec: str = "wav") -> DataFrame:
     v² and their total stay under 2^53), so the one float step —
     sqrt(ssq/n) — is IEEE-identical across engines; callers round
     JVM-side with ``F.round`` (the PNG-stats discipline)."""
-    return media.select("media_id", "content").mapInPandas(
-        _audio_stats_worker(codec), schema=AUDIO_STATS_SCHEMA
-    )
+    return _media_map(media, _audio_stats_worker(codec), AUDIO_STATS_SCHEMA)
 
 
 def _audio_stats_worker(codec: str = "wav"):
@@ -1890,9 +1791,7 @@ def extract_gif_frame_stats(media: DataFrame) -> DataFrame:
     array cache-resident under 32-way concurrency (a 256-blob pool
     streams ~30 MB/phase per core and saturates DRAM — the round-7
     concurrency-collapse class) and the Arrow yields small."""
-    return media.select("media_id", "content").mapInPandas(
-        _gif_frame_stats_worker(), schema=GIF_FRAME_SCHEMA
-    )
+    return _media_map(media, _gif_frame_stats_worker(), GIF_FRAME_SCHEMA)
 
 
 def _gif_frame_stats_worker():

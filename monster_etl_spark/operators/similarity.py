@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from monster_etl_spark.operators.partitioning import spread as _spread
+from monster_etl_spark.pyworkers import map_in_pandas
 
 SIGN_LSH_DIMS = 8  # first b dims' sign bits form the bucket key
 
@@ -1512,7 +1513,7 @@ def brute_force_topk_arrow(
                 }
             )
 
-    cand = c.mapInPandas(kernel, schema="query_id long, neighbor_id long, raw_sim double")
+    cand = map_in_pandas(c, kernel, "query_id long, neighbor_id long, raw_sim double")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         cand.select(
@@ -1807,7 +1808,7 @@ def ivf_topk_arrow(
                 {"query_id": qid_arr[qi], "neighbor_id": nid[ni], "raw_sim": dk}
             )
 
-    cand = c.mapInPandas(kernel, schema="query_id long, neighbor_id long, raw_sim double")
+    cand = map_in_pandas(c, kernel, "query_id long, neighbor_id long, raw_sim double")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         cand.select(
@@ -2684,9 +2685,7 @@ def rotate_embeddings(
                 ]
             yield pd.DataFrame({id_col: pdf[id_col], vec_col: out})
 
-    return src.mapInPandas(
-        kernel, schema=f"{id_col} long, {vec_col} array<double>"
-    )
+    return map_in_pandas(src, kernel, f"{id_col} long, {vec_col} array<double>")
 
 
 def opq_ivfpq_topk(

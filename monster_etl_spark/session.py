@@ -25,6 +25,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """Half of physical RAM in whole GiB, at least 1g, capped at 16g."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(16, ram // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "monster-etl-spark",
     master: str | None = None,
@@ -37,6 +43,7 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cores = os.cpu_count() or 32 if cpus == "*" else int(cpus)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -51,7 +58,7 @@ def get_spark(
         if env_sp:
             shuffle_partitions = int(env_sp)
         else:
-            shuffle_partitions = os.cpu_count() or 32 if cpus == "*" else int(cpus)
+            shuffle_partitions = cores
     # Scale-adaptive shuffle sizing ON BY DEFAULT (round-4 finding: the
     # per-core default OOMs an 8g heap at sf100 — 32 partitions x 19M rows
     # per sort task — and spill-drags the contamination join 2.2x; see
@@ -120,8 +127,10 @@ def get_spark(
         # extra work per take() is bounded by (cores - 1) partitions,
         # and every take/limit site in this engine is a bounded probe on
         # an expensive subtree, where one wave strictly wins (round-12;
-        # guide §2.6 stragglers/idle capacity).
-        .config("spark.sql.limit.initialNumPartitions", str(shuffle_partitions))
+        # guide §2.6 stragglers/idle capacity). Capped at the core count
+        # so a large SPARK_GRAFT_SHUFFLE_PARTITIONS soak value does not
+        # widen every probe's first wave past one wave of tasks.
+        .config("spark.sql.limit.initialNumPartitions", str(min(shuffle_partitions, cores)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "true" if ansi else "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -133,8 +142,11 @@ def get_spark(
         # 17 GB of blobs in flight). Measured sweet spot is 16g: 8g
         # dies, 48g is ~1.7x SLOWER on the same query (G1 young gen
         # sprawls over tens of GB and cache/TLB locality collapses).
-        # On a real cluster this maps to ordinary executor sizing.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # On a real cluster this maps to ordinary executor sizing. Under
+        # 32 GB of RAM the default is half of physical memory (the rest
+        # is for Python workers and the page cache); SPARK_DRIVER_MEMORY
+        # overrides.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_heap()))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

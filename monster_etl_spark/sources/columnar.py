@@ -76,6 +76,8 @@ def read_avro_py(spark: SparkSession, path: str) -> DataFrame:
         avro_read_blob,
         avro_schema_to_ddl,
     )
+    from monster_etl_spark.operators.partitioning import spread
+    from monster_etl_spark.pyworkers import map_in_pandas
 
     split_bytes = 1 << 25  # ~32 MB of OCF per decode task
 
@@ -112,20 +114,11 @@ def read_avro_py(spark: SparkSession, path: str) -> DataFrame:
                 {n: [r[n] for r in rows] for n in field_names}
             ) if rows else pd.DataFrame({n: [] for n in field_names})
 
-    chunks = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select("content")
-        .mapInPandas(_splitter, schema="content binary")
-    )
-    # Never-shrink guard (mirrors _cpu_spread): only widen to
-    # defaultParallelism when the chunk scan is narrower — a many-file
-    # scan already wider than the core count keeps its partitioning and
-    # skips the blob shuffle entirely.
-    target = spark.sparkContext.defaultParallelism
-    if chunks.rdd.getNumPartitions() < target:
-        chunks = chunks.repartition(target)
-    return chunks.mapInPandas(_worker, schema=ddl)
+    files = spark.read.format("binaryFile").load(path).select("content")
+    # spread never shrinks: a many-file scan already wider than the core
+    # count keeps its partitioning and skips the blob shuffle entirely
+    chunks = spread(map_in_pandas(files, _splitter, "content binary"))
+    return map_in_pandas(chunks, _worker, ddl)
 
 
 def write_avro_py(df: DataFrame, path: str, codec: str = "deflate") -> None:

@@ -33,6 +33,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from monster_etl_spark.pyworkers import map_in_pandas
+
 MEMBER_SCHEMA = "tarball string, member string, size long, content binary"
 
 
@@ -73,7 +75,7 @@ def untar_members(
                     yield pd.DataFrame(out)
 
     src = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    return src.mapInPandas(extract, MEMBER_SCHEMA)
+    return map_in_pandas(src, extract, MEMBER_SCHEMA)
 
 
 def untar_to_dir(
@@ -99,5 +101,5 @@ def untar_to_dir(
                     f.write(row["content"])
             yield pd.DataFrame({"n": [len(pdf)]})
 
-    counts = members.mapInPandas(land, "n long")
+    counts = map_in_pandas(members, land, "n long")
     return sum(r["n"] for r in counts.collect())

@@ -7,11 +7,12 @@ where ``monster_etl_spark`` is not importable: another host, or a driver
 started outside the checkout without ``PYTHONPATH``. A single by-reference
 global turns into ``ModuleNotFoundError`` inside the worker.
 
-Two checks: every worker round-trips through ``pyspark.cloudpickle`` into
-a child interpreter that cannot import the package and still encodes,
-decodes and profiles a small batch there; and one fused query per shared
-helper runs end to end from a driver whose working directory is not the
-repo and whose environment has no ``PYTHONPATH``."""
+Two checks: every worker (the adapter wrapped by ``pyworkers.trimmed``,
+as ``map_in_pandas`` ships it) round-trips through ``pyspark.cloudpickle``
+into a child interpreter that cannot import the package and still
+encodes, decodes and profiles a small batch there; and one fused query
+per shared helper runs end to end from a driver whose working directory
+is not the repo and whose environment has no ``PYTHONPATH``."""
 
 import json
 import os
@@ -22,6 +23,7 @@ import textwrap
 from pyspark import cloudpickle
 
 from monster_etl_spark.operators import multimodal as mm
+from monster_etl_spark.pyworkers import trimmed
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -86,8 +88,9 @@ def _child_env():
 
 def test_workers_unpickle_and_run_without_the_package(tmp_path):
     pairs = _pairs()
+    # the adapter goes through the same wrapper map_in_pandas applies
     payload = cloudpickle.dumps(
-        [(name, cloudpickle.dumps((a, c, flag))) for name, a, c, flag in pairs]
+        [(name, cloudpickle.dumps((trimmed(a), c, flag))) for name, a, c, flag in pairs]
     )
     proc = subprocess.run(
         [sys.executable, "-c", _CHILD],
