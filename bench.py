@@ -339,11 +339,21 @@ def _box_loaded(state: dict | None, at_start: bool) -> str | None:
 
 
 def _normalize_plan(s: str) -> str:
-    """Strip the session-varying parts of a physical-plan string
-    (exprIds, plan ids, object addresses, codegen stage ids) so the
-    hash is stable across sessions for the same plan SHAPE."""
+    """Strip the session-varying parts of a physical-plan string so the
+    hash is stable within and across sessions for the same plan SHAPE:
+    exprIds, plan ids, object addresses, codegen stage ids, and the
+    per-process counters in lambda-variable names (PySpark names a
+    Column-API lambda ``x_13``) and in ``_common_expr_<n>`` aliases.
+
+    A scan metadata value longer than ``spark.sql.maxMetadataStringLength``
+    is cut and ends in ``...``; when it holds a lambda variable, the cut
+    point moves with the counters' digit count, so such a value keeps
+    only its text before the first lambda variable."""
     import re
 
+    s = re.sub(r"(: [^:\n]*?)lambda [^:\n]*?\.\.\.(?=, \w+: |$)", r"\1...", s, flags=re.M)
+    s = re.sub(r"(lambda \w+?)_\d+#", r"\1#", s)
+    s = re.sub(r"_common_expr_\d+", "_common_expr_x", s)
     s = re.sub(r"#\d+L?", "#x", s)
     s = re.sub(r"plan_id=\d+", "plan_id=x", s)
     s = re.sub(r"\bid=#?\d+", "id=x", s)

@@ -21,32 +21,26 @@ from pyspark.sql import functions as F
 
 from monster_etl_spark.operators.partitioning import spread as _spread
 from monster_etl_spark.pyworkers import map_in_pandas
+from monster_etl_spark.sql import quote_ident
 
 SIGN_LSH_DIMS = 8  # first b dims' sign bits form the bucket key
 
 
-def _as_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
-
-
-# --- SQL-string twins (round-11) -------------------------------------------
-# The Column-API construction of a cosine is ~50 py4j round trips; every
-# similarity query rebuilds it on every timed bench run. When the caller
-# can name its columns, the same Catalyst tree (identical HOF lambdas,
-# double literals via the 0.0D suffix) is parsed in ONE round trip.
-# dot/norm/cosine below accept either a Column (unchanged behavior) or a
-# string column reference (parsed fast path).
+# --- Expression builders ---------------------------------------------------
+# Every builder takes column NAMES and parses one Spark-SQL string: the
+# Column-API construction of a cosine is ~50 py4j round trips, the parsed
+# string one, and both give the same Catalyst tree (HOF lambdas, double
+# literals via the 0.0D suffix). The JVM fold order ``acc + x*y`` from
+# 0.0, index ascending, is the one the Arrow and driver tiers replay
+# bit for bit (:func:`_left_fold`).
 
 
 def _qid(name: str) -> str:
-    """Backtick-quote a plain or dot-qualified column identifier for the
-    parsed SQL fast paths (round-11 advice: a reserved-word or
-    special-char column name broke parsing / mis-resolved where the
-    Column path handled it). Splitting on '.' treats each segment as one
-    identifier — matching how every caller writes qualified refs
-    ("a.vec"); a column whose NAME contains a literal dot must use the
-    Column overloads."""
-    return ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
+    """Backtick-quote a plain or dot-qualified column reference. Each
+    '.'-separated segment is one identifier (callers write qualified refs
+    as "a.vec"); a column whose NAME contains a dot must be renamed
+    first."""
+    return ".".join(quote_ident(part) for part in name.split("."))
 
 
 def _as_double_sql(a: str) -> str:
@@ -66,7 +60,11 @@ def _cosine_sql(a: str, b: str) -> str:
     return f"({_dot_sql(da, db)} / nullif({_norm_sql(da)} * {_norm_sql(db)}, 0.0D))"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
+def _as_double(a: str) -> Column:
+    return F.expr(_as_double_sql(_qid(a)))
+
+
+def dot(a: str, b: str) -> Column:
     """Sequential-fold dot product (index order, deterministic).
 
     Measured fastest of the JVM-side strategies (512k x d=64, local):
@@ -77,22 +75,40 @@ def dot(a: Column | str, b: Column | str) -> Column:
     step-change beyond it is the Arrow select-then-rescore kernel
     (``brute_force_topk_arrow`` / ``ivf_topk_arrow``), the two audited
     named exceptions to the JVM-only policy."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(_qid(a), _qid(b)))
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    return F.expr(_dot_sql(_qid(a), _qid(b)))
 
 
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_norm_sql(_qid(a)))
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def norm(a: str) -> Column:
+    return F.expr(_norm_sql(_qid(a)))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_cosine_sql(_qid(a), _qid(b)))
-    da, db = _as_double(a), _as_double(b)
-    return dot(da, db) / F.nullif(norm(da) * norm(db), F.lit(0.0))
+def cosine(a: str, b: str) -> Column:
+    return F.expr(_cosine_sql(_qid(a), _qid(b)))
+
+
+def _fold_col(a: Column, b: Column, cast: bool = False) -> Column:
+    """:func:`dot`'s fold over Column operands, for the folds that run
+    inside another higher-order function, where an operand is a lambda
+    variable or a slice and has no column name. ``cast`` casts ``a``'s
+    elements to double inside the multiply lambda."""
+    mul = (lambda x, y: x.cast("double") * y) if cast else (lambda x, y: x * y)
+    return F.aggregate(F.zip_with(a, b, mul), F.lit(0.0), lambda acc, x: acc + x)
+
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine_sim double, rank long"
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The ranking tail every top-k operator shares: number each query's
+    candidates by (cosine_sim desc, neighbor_id asc) — ties break on the
+    neighbor id, so results are deterministic — keep ranks <= k, and
+    return (query_id, neighbor_id, cosine_sim, rank)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    )
 
 
 def brute_force_topk(
@@ -124,69 +140,40 @@ def brute_force_topk(
             F.round(cosine("qv", "nv"), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)
 
 
-def sign_bucket(vec: Column | str, dims: int = SIGN_LSH_DIMS) -> Column:
+def sign_bucket(vec: str, dims: int = SIGN_LSH_DIMS) -> Column:
     """LSH bucket key: sign bits of the first ``dims`` components, as a
     string like ``"10110010"``. Equivalent to random-hyperplane LSH with
-    axis-aligned planes — deterministic and SQL-expressible. A string
-    argument takes the one-round-trip parsed path (round-11)."""
-    if isinstance(vec, str):
-        vec = _qid(vec)
-        cases = ", ".join(
-            f"CASE WHEN CAST(element_at({vec}, {i + 1}) AS DOUBLE) >= 0 "
-            "THEN '1' ELSE '0' END"
-            for i in range(dims)
-        )
-        return F.expr(f"concat({cases})")
-    bits = [
-        F.when(F.element_at(vec, i + 1).cast("double") >= 0, F.lit("1")).otherwise(F.lit("0"))
+    axis-aligned planes — deterministic and SQL-expressible."""
+    vec = _qid(vec)
+    cases = ", ".join(
+        f"CASE WHEN CAST(element_at({vec}, {i + 1}) AS DOUBLE) >= 0 THEN '1' ELSE '0' END"
         for i in range(dims)
-    ]
-    return F.concat(*bits)
+    )
+    return F.expr(f"concat({cases})")
 
 
-def multiprobe_buckets(vec: Column | str, dims: int = SIGN_LSH_DIMS) -> Column:
+def multiprobe_buckets(vec: str, dims: int = SIGN_LSH_DIMS) -> Column:
     """Multi-probe LSH probe set: the exact sign pattern plus every
     1-bit-flipped pattern (``dims + 1`` probes). Probing neighbors in
     sign-space recovers most of the recall lost to bucketing WITHOUT
     growing corpus-side buckets — only the (small) query side fans out,
-    so the join stays linear in bucket sizes. A string argument takes
-    the one-round-trip parsed path (round-11)."""
-    if isinstance(vec, str):
-        vec = _qid(vec)
+    so the join stays linear in bucket sizes."""
+    vec = _qid(vec)
 
-        def bit_sql(i: int) -> str:
-            return (
-                f"CASE WHEN CAST(element_at({vec}, {i + 1}) AS DOUBLE) >= 0 "
-                "THEN 1 ELSE 0 END"
-            )
+    def bit_sql(i: int) -> str:
+        return f"CASE WHEN CAST(element_at({vec}, {i + 1}) AS DOUBLE) >= 0 THEN 1 ELSE 0 END"
 
-        def pattern_sql(flip: int) -> str:
-            return "concat(" + ", ".join(
-                f"CAST({f'1 - ({bit_sql(i)})' if i == flip else bit_sql(i)} AS STRING)"
-                for i in range(dims)
-            ) + ")"
+    def pattern_sql(flip: int) -> str:
+        return "concat(" + ", ".join(
+            f"CAST({f'1 - ({bit_sql(i)})' if i == flip else bit_sql(i)} AS STRING)"
+            for i in range(dims)
+        ) + ")"
 
-        probes = ", ".join(pattern_sql(f) for f in [-1, *range(dims)])
-        return F.expr(f"array({probes})")
-    bits = [
-        F.when(F.element_at(vec, i + 1).cast("double") >= 0, F.lit(1)).otherwise(F.lit(0))
-        for i in range(dims)
-    ]
-
-    def pattern(flip: int) -> Column:
-        return F.concat(
-            *[(F.lit(1) - b if i == flip else b).cast("string") for i, b in enumerate(bits)]
-        )
-
-    return F.array(pattern(-1), *[pattern(i) for i in range(dims)])
+    probes = ", ".join(pattern_sql(f) for f in [-1, *range(dims)])
+    return F.expr(f"array({probes})")
 
 
 def lsh_topk(
@@ -233,12 +220,7 @@ def lsh_topk(
             F.round(cosine("qv", "nv"), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)
 
 
 def auto_sign_dims(n_rows: int, target_bucket: int = 16, lo: int = 8, hi: int = 24) -> int:
@@ -303,7 +285,7 @@ IVF_KMEANS_ITERS = 3
 # sf0.1 (2,000 x 64 corpus; tools/profile_query.py). Below this many FIT
 # rows the fit collects the (already unit-normalized / sub-sliced)
 # vectors in ONE Arrow job and runs the identical Lloyd recurrence in
-# numpy on the driver: dots are exact left folds (cumsum), rounding is
+# numpy on the driver: dots are exact left folds (:func:`_left_fold`), rounding is
 # the Spark shortest-decimal-repr HALF_UP (see tools/tie_sweep.py), ties
 # and empty-cell dropout replicate the struct-ordering semantics, so the
 # centroids are the same values the distributed loop emits (oracle-gated
@@ -449,18 +431,7 @@ def _scored_cents(vec: Column) -> Column:
     lexicographic max/sort mean "highest similarity, ties to the lowest
     cent_id"; ``c_sim`` is NOT a cosine (unnormalized) — use it only to
     rank cells for one fixed input vector."""
-    return F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c.getField("cv"), lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("c_sim"),
-            (-c.getField("cent_id")).alias("neg_id"),
-            c.getField("cent_id").alias("cent_id"),
-        ),
-    )
+    return _scored_structs(F.col("cents"), vec, "cent_id")
 
 
 def _spark_round(x: float, scale: int = 9) -> float:
@@ -471,28 +442,29 @@ def _spark_round(x: float, scale: int = 9) -> float:
     return spark_round(x, scale)
 
 
-def _fold_dots(V, C):
-    """Exact left-fold dot products: row i of ``V`` against every row of
-    ``C`` with the SAME summation order as the JVM tier's
-    ``aggregate(zip_with(a, b, *), 0.0, +)`` — elementwise products, then
-    a sequential prefix sum (``cumsum`` is a strict left fold, and
-    ``0.0 + p0 == p0`` exactly), so scores are bit-identical to
-    :func:`_scored_cents` / :func:`_pq_best_code` on the same doubles."""
+def _left_fold():
+    """The JVM's dot-product fold for numpy: ``fold(a, b)`` sums ``a * b``
+    over the LAST axis (broadcasting the rest) as ``acc + x*y`` from 0.0,
+    index ascending — the order of ``aggregate(zip_with(a, b, *), 0.0,
+    +)`` — so the Arrow and driver tiers reproduce the JVM tier's doubles
+    bit for bit. ``np.sum`` and ``@`` reorder the additions and do not.
+    ``fold(V[:, None], C[None])`` is the all-pairs form.
+
+    A factory, not a module-level function: a kernel that captures the
+    returned ``fold`` ships it by value (it references only ``np``), so
+    Python workers never import this package."""
     import numpy as np
 
-    n, k = V.shape[0], C.shape[0]
-    out = np.empty((n, k), dtype=np.float64)
-    for j in range(k):
-        out[:, j] = np.cumsum(V * C[j], axis=1)[:, -1]
-    return out
+    def fold(a, b):
+        acc = 0.0
+        for j in range(np.shape(a)[-1]):
+            acc = acc + a[..., j] * b[..., j]
+        return acc
+
+    return fold
 
 
-def _fold_sq(x) -> float:
-    """Exact left fold of ``acc + v*v`` (the JVM ``norm``/``c2`` shape)."""
-    import numpy as np
-
-    sq = x * x
-    return float(np.cumsum(sq)[-1]) if len(sq) else 0.0
+_fold = _left_fold()
 
 
 def _collect_fit_rows(df: DataFrame, id_name: str, vec_name: str, cap: int):
@@ -586,7 +558,7 @@ def _kmeans_driver_fit(spark, ids, V, n_centroids: int, iters: int) -> DataFrame
     cent_ids = list(range(1, k + 1))
     C = np.array([[_spark_round(x) for x in row] for row in V[:k]], dtype=np.float64)
     for _ in range(iters):
-        assign = np.argmax(_fold_dots(V, C), axis=1)
+        assign = np.argmax(_fold(V[:, None], C[None]), axis=1)
         new_ids: list[int] = []
         new_rows: list[np.ndarray] = []
         for j, cid_ in enumerate(cent_ids):
@@ -594,7 +566,7 @@ def _kmeans_driver_fit(spark, ids, V, n_centroids: int, iters: int) -> DataFrame
             if members.shape[0] == 0:
                 continue
             mv = members.sum(axis=0) / members.shape[0]
-            mnorm = _fold_sq(mv) ** 0.5
+            mnorm = float(_fold(mv, mv)) ** 0.5
             if not mnorm > 0:
                 continue
             new_ids.append(cid_)
@@ -633,8 +605,8 @@ def _pq_driver_fit(spark, ids, V, m: int, n_codes: int, iters: int) -> DataFrame
         for _ in range(iters):
             if C.shape[0] == 0:
                 break
-            c2 = np.array([_fold_sq(row) for row in C])
-            scores = _fold_dots(Vs, C) - 0.5 * c2[None, :]
+            c2 = _fold(C, C)
+            scores = _fold(Vs[:, None], C[None]) - 0.5 * c2[None, :]
             assign = np.argmax(scores, axis=1)
             new_ids: list[int] = []
             new_rows: list[np.ndarray] = []
@@ -986,12 +958,7 @@ def ivf_topk(
             F.round(dot("qv", "nv"), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)
 
 
 def auto_centroids(n_rows: int) -> int:
@@ -1123,53 +1090,37 @@ def _cell_pairs_arrow(threshold: float):
     ~sqrt(N) centroid recipe upstream)."""
 
     margin = 5e-7 + 1e-9
+    fold = _fold  # captured, so the kernel ships it by value
 
     def _pairs(pdf):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="int64"),
-                "id_b": pd.Series(dtype="int64"),
-                "cosine_sim": pd.Series(dtype="float64"),
-            }
-        )
         n = len(pdf)
-        if n < 2:
-            return empty
         vid = pdf["vid"].to_numpy()
         order = np.argsort(vid)
-        vid = vid[order]
-        U = np.stack(
-            [np.asarray(x, dtype=np.float64) for x in pdf["u"].to_numpy()[order]]
-        )
-        thr = threshold - margin
-        out_a: list = []
-        out_b: list = []
-        out_s: list = []
-        col = np.arange(n)[None, :]
-        for i0 in range(0, n, 4096):
-            i1 = min(i0 + 4096, n)
-            g = U[i0:i1] @ U.T
-            mask = (g >= thr) & (col > np.arange(i0, i1)[:, None])
-            ci, cj = np.nonzero(mask)
-            for r, j in zip(ci.tolist(), cj.tolist()):
-                ua = U[i0 + r]
-                ub = U[j]
-                s = 0.0
-                for k in range(ua.shape[0]):  # the JVM fold, verbatim
-                    s += float(ua[k]) * float(ub[k])
-                out_a.append(int(vid[i0 + r]))
-                out_b.append(int(vid[j]))
-                out_s.append(s)
-        if not out_a:
-            return empty
+        vid = vid[order].astype("int64")
+        out_a, out_b, out_s = [vid[:0]], [vid[:0]], [np.zeros(0)]
+        if n >= 2:
+            U = np.stack(
+                [np.asarray(x, dtype=np.float64) for x in pdf["u"].to_numpy()[order]]
+            )
+            thr = threshold - margin
+            col = np.arange(n)[None, :]
+            for i0 in range(0, n, 4096):
+                i1 = min(i0 + 4096, n)
+                g = U[i0:i1] @ U.T
+                mask = (g >= thr) & (col > np.arange(i0, i1)[:, None])
+                ci, cj = np.nonzero(mask)
+                ia = i0 + ci
+                out_a.append(vid[ia])
+                out_b.append(vid[cj])
+                out_s.append(fold(U[ia], U[cj]))  # the JVM fold, exactly
         return pd.DataFrame(
             {
-                "id_a": np.asarray(out_a, dtype="int64"),
-                "id_b": np.asarray(out_b, dtype="int64"),
-                "cosine_sim": np.asarray(out_s, dtype="float64"),
+                "id_a": np.concatenate(out_a),
+                "id_b": np.concatenate(out_b),
+                "cosine_sim": np.concatenate(out_s),
             }
         )
 
@@ -1380,12 +1331,7 @@ def brute_force_topk_blocked(
     partial = scored.withColumn("prank", F.row_number().over(wb)).filter(
         F.col("prank") <= k
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(partial, k)
 
 
 def brute_force_topk_arrow(
@@ -1435,41 +1381,62 @@ def brute_force_topk_arrow(
     built-in column functions only express as interpreted higher-order
     folds (measured ~10x slower at sf0.1; see QUERIES.md).
     """
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-        )
-        # bounded by contract (this is the side the JVM path broadcasts);
-        # one metadata-sized collect, q x d doubles
-        .collect()
-    )
+    got = _collect_queries(queries, id_col, vec_col)
+    if got is None:
+        return queries.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    return _arrow_topk(corpus, id_col, vec_col, _brute_kernel(*got, k), k)
+
+
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """Query-side prelude of the Arrow kernels: ONE bounded collect (the
+    side the JVM paths broadcast; q x d doubles) as ``(query ids as
+    int64, q x d float64 matrix)``. NULL-vector query rows are dropped —
+    the JVM paths score them NULL — and an empty set returns ``None``, so
+    the caller answers with an empty frame of the output schema."""
     import numpy as np
 
-    # edge contract parity with the JVM path (which scores NULL vectors
-    # NULL and an empty query side to an empty result): skip NULL-vector
-    # query rows instead of crashing on list(None), and short-circuit an
-    # empty query set to an empty frame of the output schema
-    q_rows = [r for r in q_rows if r.qv is not None]
-    if not q_rows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank long"
-        )
-    qid_arr = np.asarray([r.query_id for r in q_rows], dtype=np.int64)
-    qm = np.asarray([list(r.qv) for r in q_rows], dtype=np.float64)
-    n_q, dims = qm.shape
-    qss = np.zeros(n_q)
-    for j in range(dims):  # fold-order accumulation (bit-parity with norm())
-        qss = qss + qm[:, j] * qm[:, j]
-    q_norm = np.sqrt(qss)
-
-    c = _spread(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("nv")
-        # NULL corpus vectors score NULL in the JVM path (sorted last);
-        # the kernel skips them up front instead of crashing np.asarray
-        ).where(F.col("nv").isNotNull())
+    rows = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+    ).collect()
+    rows = [r for r in rows if r.qv is not None]
+    if not rows:
+        return None
+    return (
+        np.asarray([r.query_id for r in rows], dtype=np.int64),
+        np.asarray([list(r.qv) for r in rows], dtype=np.float64),
     )
 
+
+def _arrow_topk(corpus: DataFrame, id_col: str, vec_col: str, kernel, k: int) -> DataFrame:
+    """Stream the corpus through ``kernel`` — a NARROW ``mapInPandas``
+    pass, the corpus never shuffles — and rank the emitted
+    ``(query_id, neighbor_id, raw_sim)`` candidates JVM-side: the 6dp
+    HALF_UP round, then :func:`_topk` (the one shuffle, on query_id, over
+    <= n_batches x q x (k+ties) rows). NULL corpus vectors score NULL in
+    the JVM paths (sorted last); the kernels never see them."""
+    c = _spread(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("nv")
+        ).where(F.col("nv").isNotNull())
+    )
+    cand = map_in_pandas(c, kernel, "query_id long, neighbor_id long, raw_sim double")
+    return _topk(
+        cand.select(
+            "query_id", "neighbor_id", F.round(F.col("raw_sim"), 6).alias("cosine_sim")
+        ),
+        k,
+    )
+
+
+def _brute_kernel(qid_arr, qm, k: int):
+    """The exact-cosine select-then-rescore kernel of
+    :func:`brute_force_topk_arrow` over the collected queries ``(qid_arr,
+    qm)``. References no module-level name (the fold is captured), so
+    cloudpickle ships it by value."""
+    import numpy as np
+
+    fold = _fold
+    q_norm = np.sqrt(fold(qm, qm))  # fold order: bit-parity with norm()
     # 1e-6 covers a 6dp rounded tie on either side; the rest absorbs
     # the GEMM-vs-fold reassociation error (~d*eps, < 1e-12 here)
     slack = 2e-6
@@ -1497,34 +1464,17 @@ def brute_force_topk_arrow(
             else:
                 keep = np.isfinite(cos)
             qi, ni = np.nonzero(keep)
-            # rescore pass: the few kept pairs, accumulated in fold
-            # order (acc = acc + x*y, j ascending) for bit-parity
+            # rescore pass: only the kept pairs, in the JVM fold order
             qk, nk = qm[qi], nm[ni]
-            dk = np.zeros(len(qi))
-            ns = np.zeros(len(qi))
-            for j in range(dims):
-                dk = dk + qk[:, j] * nk[:, j]
-                ns = ns + nk[:, j] * nk[:, j]
             yield pd.DataFrame(
                 {
                     "query_id": qid_arr[qi],
                     "neighbor_id": nid[ni],
-                    "raw_sim": dk / (q_norm[qi] * np.sqrt(ns)),
+                    "raw_sim": fold(qk, nk) / (q_norm[qi] * np.sqrt(fold(nk, nk))),
                 }
             )
 
-    cand = map_in_pandas(c, kernel, "query_id long, neighbor_id long, raw_sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        cand.select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("raw_sim"), 6).alias("cosine_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return kernel
 
 
 def _np_super_index(cm, n_super: int | None = None):
@@ -1657,36 +1607,32 @@ def ivf_topk_arrow(
     cent_rows = kmeans_centroids(
         corpus, id_col, vec_col, n_centroids, kmeans_iters, fit_fraction=fit_fraction
     ).collect()
-    if not cent_rows:  # empty corpus -> nothing to probe; empty result
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank long"
-        )
+    got = _collect_queries(queries, id_col, vec_col)
+    if not cent_rows or got is None:  # nothing to probe, or no queries
+        return queries.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     cent_rows.sort(key=lambda r: r.cent_id)
     cent_ids = np.asarray([r.cent_id for r in cent_rows], dtype=np.int64)
     cm = np.asarray([list(r.cv) for r in cent_rows], dtype=np.float64)
-    n_cent, dims = cm.shape
+    kernel = _ivf_kernel(
+        *got, cent_ids, cm, n_probes, k, sup_probes if assignment == "two_level" else None
+    )
+    return _arrow_topk(corpus, id_col, vec_col, kernel, k)
 
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).collect()  # bounded by contract (JVM path broadcasts this side)
-    # same edge contract as brute_force_topk_arrow: drop NULL-vector
-    # query rows; empty query set or no centroids -> empty result frame
-    q_rows = [r for r in q_rows if r.qv is not None]
-    if not q_rows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank long"
-        )
-    qid_arr = np.asarray([r.query_id for r in q_rows], dtype=np.int64)
-    qm = np.asarray([list(r.qv) for r in q_rows], dtype=np.float64)
-    n_q = len(qid_arr)
 
-    # driver-side query probes + unit vectors, fold order throughout
-    qc = np.zeros((n_q, n_cent))
-    qss = np.zeros(n_q)
-    for j in range(dims):
-        qc = qc + qm[:, j : j + 1] * cm[None, :, j]
-        qss = qss + qm[:, j] * qm[:, j]
-    q_norm = np.sqrt(qss)
+def _ivf_kernel(qid_arr, qm, cent_ids, cm, n_probes: int, k: int, sup_probes=None):
+    """The fused assign-and-score kernel of :func:`ivf_topk_arrow`. The
+    query probe sets and unit vectors are computed here, driver-side, in
+    the JVM fold order. ``sup_probes`` selects two-level assignment over
+    the centroid-table-scale super index (:func:`_np_super_index`, built
+    here once); ``None`` keeps the flat argmax. References no
+    module-level name (the fold is captured), so cloudpickle ships it by
+    value."""
+    import numpy as np
+
+    fold = _fold
+    n_q, n_cent = len(qid_arr), len(cent_ids)
+    qc = fold(qm[:, None], cm[None])  # query x centroid scores
+    q_norm = np.sqrt(fold(qm, qm))
     probe_mask = np.zeros((n_q, n_cent), dtype=bool)
     for qi in range(n_q):
         order = np.lexsort((cent_ids, -qc[qi]))  # c_sim desc, cent_id asc
@@ -1694,22 +1640,12 @@ def ivf_topk_arrow(
     with np.errstate(divide="ignore", invalid="ignore"):
         qu = qm / q_norm[:, None]
     live_q = q_norm > 0  # zero-norm queries score NULL in the JVM path
-
-    c = _spread(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("nv")
-        ).where(F.col("nv").isNotNull())  # same NULL contract as above
-    )
     slack = 2e-6  # cosine selection: 6dp tie + GEMM reassociation error
-
-    # two-level coarse quantizer (resolved above): centroid-table-scale
-    # super index, built once driver-side and captured by the kernel
-    if assignment == "two_level":
+    sm = sup_members = None
+    n_sup = 0
+    if sup_probes is not None:
         sm, sup_members = _np_super_index(cm)
         n_sup = min(sup_probes, sm.shape[0])
-    else:
-        sm = sup_members = None
-        n_sup = 0
 
     def kernel(batches):
         import pandas as pd
@@ -1720,10 +1656,7 @@ def ivf_topk_arrow(
             nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
             nm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["nv"]])
             n_b = len(nid)
-            nss = np.zeros(n_b)
-            for j in range(dims):  # fold-order norm (parity with norm())
-                nss = nss + nm[:, j] * nm[:, j]
-            n_norm = np.sqrt(nss)
+            n_norm = np.sqrt(fold(nm, nm))  # fold order (parity with norm())
 
             # cell assignment: GEMM selection (slack ~ row norm, since
             # |dot(raw, unit cent)| <= |row|), fold-order rescore,
@@ -1774,9 +1707,7 @@ def ivf_topk_arrow(
             else:
                 g = nm @ cm.T
                 ri, ci = np.nonzero(g >= (g.max(axis=1) - a_slack)[:, None])
-            acc = np.zeros(len(ri))
-            for j in range(dims):
-                acc = acc + nm[ri, j] * cm[ci, j]
+            acc = fold(nm[ri], cm[ci])
             order = np.lexsort((cent_ids[ci], -acc, ri))
             uniq, first = np.unique(ri[order], return_index=True)
             # row i -> centroid INDEX; -1 = unassignable (NaN vector,
@@ -1801,25 +1732,15 @@ def ivf_topk_arrow(
             else:
                 keep = np.isfinite(cos)
             qi, ni = np.nonzero(keep)
-            dk = np.zeros(len(qi))
-            for j in range(dims):
-                dk = dk + qu[qi, j] * nu[ni, j]
             yield pd.DataFrame(
-                {"query_id": qid_arr[qi], "neighbor_id": nid[ni], "raw_sim": dk}
+                {
+                    "query_id": qid_arr[qi],
+                    "neighbor_id": nid[ni],
+                    "raw_sim": fold(qu[qi], nu[ni]),
+                }
             )
 
-    cand = map_in_pandas(c, kernel, "query_id long, neighbor_id long, raw_sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        cand.select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("raw_sim"), 6).alias("cosine_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return kernel
 
 
 def covariance_moments(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -1915,11 +1836,7 @@ def pca_project(
     out_cols = [F.col(id_col)]
     for c in range(comps.shape[1]):
         weights = F.array(*[F.lit(float(x)) for x in comps[:, c]])
-        dot_xw = F.aggregate(
-            F.zip_with(_as_double(F.col(vec_col)), weights, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        dot_xw = _fold_col(_as_double(vec_col), weights)
         offset = float(mu @ comps[:, c])
         out_cols.append(F.round(dot_xw - F.lit(offset), 6).alias(f"pc{c + 1}"))
     return emb.select(*out_cols)
@@ -1943,7 +1860,7 @@ def _sub_rows(df: DataFrame, id_col: str, vec_col: str, m: int) -> DataFrame:
     dsub = (d / m).cast("int")  # floor
     rows = df.select(
         F.col(id_col).alias("cid"),
-        _as_double(F.col(vec_col)).alias("v"),
+        _as_double(vec_col).alias("v"),
         dsub.alias("dsub"),
         d.alias("d"),
     )
@@ -1991,14 +1908,7 @@ def _pq_best_code(sv: Column, sub_id: Column) -> Column:
     scored = F.transform(
         F.filter(F.col("cents"), lambda c: c.getField("sub_id") == sub_id),
         lambda c: F.struct(
-            (
-                F.aggregate(
-                    F.zip_with(sv, c.getField("cv"), lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                - 0.5 * c.getField("c2")
-            ).alias("score"),
+            (_fold_col(sv, c.getField("cv")) - 0.5 * c.getField("c2")).alias("score"),
             (-c.getField("cent_id")).alias("neg_id"),
             c.getField("cent_id").alias("cent_id"),
         ),
@@ -2053,7 +1963,7 @@ def pq_codebooks(
     if KMEANS_DRIVER_FIT_CAP > 0:
         got = _collect_fit_rows(
             corpus_fit.select(
-                F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("v")
+                F.col(id_col).alias("cid"), _as_double(vec_col).alias("v")
             ),
             "cid",
             "v",
@@ -2179,7 +2089,7 @@ def pq_encode(
     # at sf0.1 (tools/profile_query.py stage 45) vs ~0.1 s spread over
     # the cores. No-op at scale (round-11; guide §2.6 stragglers).
     rows = _spread(
-        corpus.select(F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("v"))
+        corpus.select(F.col(id_col).alias("cid"), _as_double(vec_col).alias("v"))
     ).crossJoin(F.broadcast(_pq_cent_array(codebooks)))
     d = F.size(F.col("v"))
     dsub = (d / m).cast("int")  # floor, as in _sub_rows
@@ -2195,6 +2105,54 @@ def pq_encode(
         ),
     )
     return rows.select(F.col("cid").alias(id_col), codes.alias("codes"))
+
+
+def _query_luts(
+    queries: DataFrame, books: DataFrame, id_col: str, vec_col: str, m: int, qv: str
+) -> DataFrame:
+    """(qid, lut): each query's ADC lookup table, a map from ``sub_id *
+    PQ_KEY_STRIDE + cent_id`` to dot(query sub-slice, codeword), built as
+    one narrow map over the broadcast codebook array per query row (no
+    explode, no exchange for |Q| rows of output; round-11). The
+    sub-slice is :func:`_sub_rows`'s; ``qv`` names the double query
+    vector inside the plan."""
+    qrows = queries.select(
+        F.col(id_col).alias("qid"), _as_double(vec_col).alias(qv)
+    ).crossJoin(F.broadcast(_pq_cent_array(books)))
+    qd = F.size(F.col(qv))
+    qdsub = (qd / m).cast("int")  # floor, as in _sub_rows
+    lut_entries = F.transform(
+        F.col("cents"),
+        lambda c: F.struct(
+            (c.getField("sub_id") * PQ_KEY_STRIDE + c.getField("cent_id")).alias("key"),
+            _fold_col(
+                F.slice(
+                    F.col(qv),
+                    c.getField("sub_id") * qdsub + 1,
+                    F.when(
+                        c.getField("sub_id") == m - 1,
+                        qd - c.getField("sub_id") * qdsub,
+                    ).otherwise(qdsub),
+                ),
+                c.getField("cv"),
+            ).alias("dp"),
+        ),
+    )
+    return qrows.select("qid", F.map_from_entries(lut_entries).alias("lut"))
+
+
+def _adc_sum(m: int) -> Column:
+    """Asymmetric-distance score of a ``codes`` row against the ``lut``
+    of the query it is paired with: the sum of its ``m`` table lookups."""
+    return F.aggregate(
+        F.zip_with(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            F.col("codes"),
+            lambda s, c: F.element_at(F.col("lut"), s * PQ_KEY_STRIDE + c),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def pq_topk(
@@ -2232,62 +2190,35 @@ def pq_topk(
     """
     books = pq_codebooks(corpus, id_col, vec_col, m, n_codes, kmeans_iters)
     codes = pq_encode(corpus, books, id_col, vec_col, m)
-    # narrow LUT build (round-11): per query row, one map over the
-    # broadcast codebook array — the former _sub_rows explode + equi-join
-    # + groupBy(qid) reassembly paid an exchange for |Q| rows of output.
-    # The sub-slice and dot-fold expressions are byte-identical to the
-    # old path's, and the (key, dp) entry set is the same, so lookups are
-    # unchanged.
-    qrows = queries.select(
-        F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qv")
-    ).crossJoin(F.broadcast(_pq_cent_array(books)))
-    qd = F.size(F.col("qv"))
-    qdsub = (qd / m).cast("int")  # floor, as in _sub_rows
-    lut_entries = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            (c.getField("sub_id") * PQ_KEY_STRIDE + c.getField("cent_id")).alias("key"),
-            F.aggregate(
-                F.zip_with(
-                    F.slice(
-                        F.col("qv"),
-                        c.getField("sub_id") * qdsub + 1,
-                        F.when(
-                            c.getField("sub_id") == m - 1,
-                            qd - c.getField("sub_id") * qdsub,
-                        ).otherwise(qdsub),
-                    ),
-                    c.getField("cv"),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dp"),
-        ),
-    )
-    lut = qrows.select("qid", F.map_from_entries(lut_entries).alias("lut"))
-    score = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                F.col("codes"),
-                lambda s, c: F.element_at(F.col("lut"), s * PQ_KEY_STRIDE + c),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    lut = _query_luts(queries, books, id_col, vec_col, m, "qv")
+    score = F.round(_adc_sum(m), 6)
     pairs = codes.crossJoin(F.broadcast(lut)).filter(F.col(id_col) != F.col("qid"))
-    from pyspark.sql import Window
-
-    shortlist = (
+    return _rerank_shortlist(
         pairs.select(
             F.col("qid").alias("query_id"),
             F.col(id_col).alias("neighbor_id"),
             score.alias("approx_score"),
-        )
-        .withColumn(
+        ),
+        queries, corpus, id_col, vec_col, k, k * shortlist_factor,
+    )
+
+
+def _rerank_shortlist(
+    pairs: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    n_short: int,
+) -> DataFrame:
+    """The PQ entry points' exact re-rank: keep each query's ``n_short``
+    best ``approx_score`` candidates of ``pairs`` (query_id, neighbor_id,
+    approx_score; ties to the lowest neighbor id), then rank ONLY those by
+    true cosine over the raw vectors — equi-joins whose probe side is
+    |Q| x n_short rows, independent of corpus size."""
+    shortlist = (
+        pairs.withColumn(
             "arank",
             F.row_number().over(
                 Window.partitionBy("query_id").orderBy(
@@ -2295,14 +2226,12 @@ def pq_topk(
                 )
             ),
         )
-        .filter(F.col("arank") <= k * shortlist_factor)
+        .filter(F.col("arank") <= n_short)
         .drop("arank", "approx_score")
     )
-    # exact re-rank: raw vectors for shortlist rows only (equi-joins whose
-    # probe side is |Q| * k * shortlist_factor rows, corpus-size-free)
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    return (
+    scored = (
         shortlist.join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
         .select(
@@ -2310,16 +2239,8 @@ def pq_topk(
             "neighbor_id",
             F.round(cosine("qv", "nv"), 6).alias("cosine_sim"),
         )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cosine_sim"), F.asc("neighbor_id")
-                )
-            ).cast("long"),
-        )
-        .filter(F.col("rank") <= k)
     )
+    return _topk(scored, k)
 
 
 def ivfpq_topk(
@@ -2449,56 +2370,12 @@ def ivfpq_topk(
             .join(F.broadcast(cent), "cent_id")
             .select(
                 "qid", "cent_id",
-                F.aggregate(
-                    F.zip_with(F.col("_qraw"), F.col("cv"), lambda x, y: x.cast("double") * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("cell_dp"),
+                _fold_col(F.col("_qraw"), F.col("cv"), cast=True).alias("cell_dp"),
             )
         )
-    # narrow LUT build (round-11, same shape as pq_topk): one map over
-    # the broadcast codebook array per query row — removes the
-    # _sub_rows explode + equi-join + groupBy(qid) exchange; slice and
-    # fold expressions byte-identical, entry set unchanged
-    qrows = queries.select(
-        F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("_lqv")
-    ).crossJoin(F.broadcast(_pq_cent_array(books)))
-    qd = F.size(F.col("_lqv"))
-    qdsub = (qd / m).cast("int")  # floor, as in _sub_rows
-    lut_entries = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            (c.getField("sub_id") * PQ_KEY_STRIDE + c.getField("cent_id")).alias("key"),
-            F.aggregate(
-                F.zip_with(
-                    F.slice(
-                        F.col("_lqv"),
-                        c.getField("sub_id") * qdsub + 1,
-                        F.when(
-                            c.getField("sub_id") == m - 1,
-                            qd - c.getField("sub_id") * qdsub,
-                        ).otherwise(qdsub),
-                    ),
-                    c.getField("cv"),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dp"),
-        ),
-    )
-    lut = qrows.select("qid", F.map_from_entries(lut_entries).alias("lut"))
+    lut = _query_luts(queries, books, id_col, vec_col, m, "_lqv")
     probes_with_lut = q_probes.join(F.broadcast(lut), "qid")
-
-    adc_sum = F.aggregate(
-        F.zip_with(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.col("codes"),
-            lambda s, c: F.element_at(F.col("lut"), s * PQ_KEY_STRIDE + c),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    adc_sum = _adc_sum(m)
     adc = F.round(
         (F.col("cell_dp") + adc_sum) if residual else adc_sum, 6
     )
@@ -2511,37 +2388,8 @@ def ivfpq_topk(
             adc.alias("approx_score"),
         )
     )
-    shortlist = (
-        pairs.withColumn(
-            "arank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("approx_score"), F.asc("neighbor_id")
-                )
-            ),
-        )
-        .filter(F.col("arank") <= k * shortlist_factor)
-        .drop("arank", "approx_score")
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    return (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qv", "nv"), 6).alias("cosine_sim"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cosine_sim"), F.asc("neighbor_id")
-                )
-            ).cast("long"),
-        )
-        .filter(F.col("rank") <= k)
+    return _rerank_shortlist(
+        pairs, queries, corpus, id_col, vec_col, k, k * shortlist_factor
     )
 
 
@@ -2602,7 +2450,7 @@ def opq_rotation(
 
     n_rows = corpus.count()
     frac = min(1.0, sample_cap / max(1, n_rows))
-    fit = corpus.select(F.col(id_col).alias("i"), _as_double(F.col(vec_col)).alias("v"))
+    fit = corpus.select(F.col(id_col).alias("i"), _as_double(vec_col).alias("v"))
     if frac < 1.0:
         fit = fit.filter(sample_hash(F.col("i"), salt="opqfit") < int(frac * HASH_SPACE))
     rows = fit.orderBy("i").limit(sample_cap).collect()
@@ -2667,7 +2515,7 @@ def rotate_embeddings(
 
     Rm = np.ascontiguousarray(np.asarray(R, dtype=np.float64))
 
-    src = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col))
+    src = df.select(F.col(id_col), _as_double(vec_col).alias(vec_col))
 
     def kernel(batches):
         import pandas as pd
@@ -2727,11 +2575,7 @@ def _scored_structs(arr: Column, vec: Column, id_field: str) -> Column:
     return F.transform(
         arr,
         lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c.getField(vec_field), lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("c_sim"),
+            _fold_col(vec, c.getField(vec_field), cast=True).alias("c_sim"),
             (-c.getField(id_field)).alias("neg_id"),
             c.getField(id_field).alias(id_field),
         ),

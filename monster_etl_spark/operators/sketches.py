@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from monster_etl_spark.sql import quote_ident
+
 CMS_DEPTH = 4
 CMS_WIDTH = 512
 
@@ -71,7 +73,7 @@ def cms_build(
     """Materialize the sketch: one row per non-empty (sketch_row, bucket)
     cell with its count. At most ``depth * width`` rows total."""
     structs = ", ".join(
-        f"named_struct('sketch_row', {r}, 'bucket', {_bucket_expr(f'`{key_col}`', r, width)})"
+        f"named_struct('sketch_row', {r}, 'bucket', {_bucket_expr(quote_ident(key_col), r, width)})"
         for r in range(depth)
     )
     return (
@@ -98,7 +100,7 @@ def cms_estimate(
             F.col("bucket").alias(f"_b{r}"), F.col("cell_count").alias(f"_c{r}")
         )
         out = out.withColumn(
-            f"_b{r}", F.expr(_bucket_expr(f"`{key_col}`", r, width))
+            f"_b{r}", F.expr(_bucket_expr(quote_ident(key_col), r, width))
         ).join(F.broadcast(s), on=f"_b{r}", how="left")
     least_args = ", ".join(f"coalesce(_c{r}, 0)" for r in range(depth))
     est = F.expr(f"CAST(least({least_args}) AS BIGINT)")

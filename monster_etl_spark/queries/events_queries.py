@@ -392,14 +392,16 @@ def q_activity_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     prof = ev.groupBy("user_id").agg(*sums)
     vec = F.array(*[F.col(f"h{h}").cast("double") for h in range(PROFILE_DIMS)])
     mean = sum(F.col(f"h{h}") for h in range(PROFILE_DIMS)) / F.lit(PROFILE_DIMS)
-    centered = F.transform(vec, lambda x: x - F.col("__m__"))
+    # the mean rides in argument position, so it is computed once per row
+    # (an ``x - mean`` lambda would get it inlined into every element)
+    centered = F.zip_with(
+        vec, F.array_repeat(mean.cast("double"), PROFILE_DIMS), lambda x, m: x - m
+    )
     v = (
-        prof.withColumn("__m__", mean.cast("double"))
-        .select(
-            "user_id",
-            centered.alias("v"),
-            sim.sign_bucket(centered, PROFILE_BUCKET_BITS).alias("bucket"),
-        )
+        prof.select("user_id", centered.alias("v"))
+        # bucket on the selected column: the centered vector is computed
+        # once per row, not once more inside each sign bit
+        .select("user_id", "v", sim.sign_bucket("v", PROFILE_BUCKET_BITS).alias("bucket"))
         .repartition(F.col("bucket"))
     )
     a, b = v.alias("a"), v.alias("b")

@@ -941,7 +941,7 @@ def knn_opq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.round(
-                F.max(F.abs(sim.norm(F.col("rv")) - sim.norm(F.col("ov")))), 6
+                F.max(F.abs(sim.norm("rv") - sim.norm("ov"))), 6
             ).alias("norm_defect"),
         )
         .select(

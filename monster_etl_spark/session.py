@@ -118,19 +118,6 @@ def get_spark(
         # user-code call-site enrichment (round-11; guide §4 — the
         # JVM<->Python boundary exists on the driver too).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # executeTake's incremental partition scan (1, then x4 per wave)
-        # serializes every bounded probe: CC's take(cap+1) on the jaccard
-        # pair subtree ran as FOUR sequential jobs of 1/4/16/11 tasks
-        # (~2.1 s of the q_corpus_curation wall at sf0.1, stage-level
-        # evidence in OPTIMIZATION_r12.md). Starting the first wave at
-        # the core count turns that into one parallel wave. Scale-safe:
-        # extra work per take() is bounded by (cores - 1) partitions,
-        # and every take/limit site in this engine is a bounded probe on
-        # an expensive subtree, where one wave strictly wins (round-12;
-        # guide §2.6 stragglers/idle capacity). Capped at the core count
-        # so a large SPARK_GRAFT_SHUFFLE_PARTITIONS soak value does not
-        # widen every probe's first wave past one wave of tasks.
-        .config("spark.sql.limit.initialNumPartitions", str(min(shuffle_partitions, cores)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "true" if ansi else "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -32,6 +32,13 @@ def register_views(spark: SparkSession, sf_dir: str, force: bool = False) -> Non
     seen.add(sf_dir)
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote ONE identifier for a parsed SQL string, doubling any
+    backtick inside it, so a reserved word or a name with a dot, a space
+    or a backtick stays one column reference."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(query)

@@ -224,13 +224,28 @@ def test_box_state_sees_detached_stray(tmp_path):
 def test_normalize_plan_strips_session_noise():
     a = bench._normalize_plan(
         "Exchange hashpartitioning(k#123L, 32) [plan_id=45] "
-        "[codegen id : 3] <lambda at 0xdeadbeef> [id=#77]"
+        "[codegen id : 3] <lambda at 0xdeadbeef> [id=#77] "
+        "transform(v#1, lambdafunction((lambda x_13#5 - m#2), lambda x_13#5, false)) "
+        "_common_expr_4#8\n"
+        "+- FileScan parquet [embedding#1] Batched: true, DataFilters: [isnotnull("
+        "transform(embedding#1, lambdafunction(cast(lambda x_7#3 as double), "
+        "lambda x_7#3, fa..., Format: Parquet"
     )
     b = bench._normalize_plan(
         "Exchange hashpartitioning(k#9L, 32) [plan_id=2] "
-        "[codegen id : 1] <lambda at 0xcafe1234> [id=#3]"
+        "[codegen id : 1] <lambda at 0xcafe1234> [id=#3] "
+        "transform(v#8, lambdafunction((lambda x_2140#9 - m#2), lambda x_2140#9, false)) "
+        "_common_expr_17#8\n"
+        "+- FileScan parquet [embedding#6] Batched: true, DataFilters: [isnotnull("
+        "transform(embedding#6, lambdafunction(cast(lambda x_1302#4 as double), "
+        "lambda x_1302#4, f..., Format: Parquet"
     )
     assert a == b
+    # a parsed-SQL lambda has no counter and matches the Column-API form
+    assert bench._normalize_plan("lambda x#5") == bench._normalize_plan("lambda x_13#5")
+    # what the normalizer keeps still tells plans apart
+    assert bench._normalize_plan("lambda acc#1") != bench._normalize_plan("lambda x_1#1")
+    assert a != bench._normalize_plan(a.replace("Parquet", "Orc"))
 
 
 def test_plan_hash_stable_within_session(spark):
@@ -246,6 +261,35 @@ def test_plan_hash_stable_within_session(spark):
     assert h1 is not None and h1 == h2
     other = bench._plan_hash(spark.range(100).select("id"))
     assert other != h1
+
+    def with_lambdas():
+        # each build draws fresh lambda-variable counters
+        arr = F.array(F.col("id").cast("double"), F.lit(1.0))
+        return spark.range(10).select(
+            F.aggregate(F.transform(arr, lambda x: x * 2), F.lit(0.0), lambda a, x: a + x)
+            .alias("s")
+        )
+    h3, h4 = bench._plan_hash(with_lambdas()), bench._plan_hash(with_lambdas())
+    assert h3 is not None and h3 == h4
+
+
+def test_similarity_query_plan_hashes_stable_within_session(spark, sf_dir):
+    """Each registry query on the similarity path (the similarity module's
+    registry plus ``q_activity_similarity``), built twice in one session,
+    has one plan hash: the guard that a refactor of the similarity layer
+    is plan-neutral can only be read off a hash that does not drift."""
+    from monster_etl_spark.queries import all_queries
+    from monster_etl_spark.queries.similarity_queries import QUERIES
+
+    names = sorted(QUERIES) + ["q_activity_similarity"]
+    assert len(names) == 23
+    registry = all_queries()
+    drift = {}
+    for name in names:
+        h1, h2 = (bench._plan_hash(registry[name].fn(spark, sf_dir)) for _ in range(2))
+        if h1 is None or h1 != h2:
+            drift[name] = (h1, h2)
+    assert not drift, drift
 
 
 def test_regression_names_session_config_change(spark):

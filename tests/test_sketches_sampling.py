@@ -52,6 +52,20 @@ def test_cms_estimate_matches_manual_min(spark, keyed):
     assert len(est) == 103 and (est.cms_estimate >= 1).all()
 
 
+def test_cms_key_column_with_backtick(spark, keyed):
+    """A key column whose name holds a backtick is one identifier: its
+    sketch and estimates equal those over the same keys named plainly."""
+    odd = keyed.withColumnRenamed("k", "k`ey")
+    plain = keyed.withColumnRenamed("k", "key")
+
+    def run(df, key):
+        sketch = cms_build(df, key)
+        est = cms_estimate(df.distinct(), sketch, key).withColumnRenamed(key, "key")
+        return sorted(sketch.collect()), sorted(est.collect())
+
+    assert run(odd, "k`ey") == run(plain, "key")
+
+
 @pytest.fixture(scope="module")
 def skewed_langs(spark):
     rows = [(i, "en") for i in range(900)] + [(i + 1000, "fr") for i in range(90)] + [

@@ -1,7 +1,8 @@
-"""Media workers ship by value.
+"""Media workers and similarity kernels ship by value.
 
-Every ``mapInPandas`` worker the media adapters and extractors build must
-reference no module-level name of this package, so cloudpickle serializes
+Every ``mapInPandas`` worker the media adapters and extractors build, and
+every Arrow kernel of the similarity operators, must reference no
+module-level name of this package, so cloudpickle serializes
 it (and the codec closures it captures) by value and Python workers run
 where ``monster_etl_spark`` is not importable: another host, or a driver
 started outside the checkout without ``PYTHONPATH``. A single by-reference
@@ -23,6 +24,7 @@ import textwrap
 from pyspark import cloudpickle
 
 from monster_etl_spark.operators import multimodal as mm
+from monster_etl_spark.operators import similarity as sim
 from monster_etl_spark.pyworkers import trimmed
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -105,6 +107,86 @@ def test_workers_unpickle_and_run_without_the_package(tmp_path):
     bad = {k: v for k, v in got.items() if v is not True}
     assert not bad, bad
     assert len(got) == len(pairs)
+
+
+def _kernels():
+    """(name, kernel, input batch, is a mapInPandas kernel) for the
+    similarity kernels, built from a 12 x 8 random corpus: the exact
+    brute-force and IVF (flat and two-level) top-k kernels and the
+    SemDeDup cell-pair kernel (an ``applyInPandas`` function, over six
+    rows and their near-copies)."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    V = rng.standard_normal((12, 8))
+    ids = np.arange(1, 13, dtype=np.int64)
+    corpus = pd.DataFrame({"neighbor_id": ids, "nv": list(V)})
+    cm = V[3:7] / np.linalg.norm(V[3:7], axis=1, keepdims=True)
+    cent_ids = np.arange(1, 5, dtype=np.int64)
+    W = np.vstack([V[:6], V[:6] + 0.01 * rng.standard_normal((6, 8))])
+    U = W / np.linalg.norm(W, axis=1, keepdims=True)
+    cells = pd.DataFrame({"vid": ids, "u": list(U)})
+    q = (ids[:3], V[:3])
+    return [
+        ("brute_force", trimmed(sim._brute_kernel(*q, 3)), corpus, True),
+        ("ivf_flat", trimmed(sim._ivf_kernel(*q, cent_ids, cm, 2, 3)), corpus, True),
+        ("ivf_two_level",
+         trimmed(sim._ivf_kernel(*q, cent_ids, cm, 2, 3, sup_probes=1)), corpus, True),
+        ("cell_pairs", sim._cell_pairs_arrow(0.95), cells, False),
+    ]
+
+
+def _run_kernel(kernel, batch, mapped):
+    import pandas as pd
+
+    out = pd.concat(list(kernel(iter([batch.copy()])))) if mapped else kernel(batch.copy())
+    return out.to_dict("list")
+
+
+_KERNEL_CHILD = textwrap.dedent(
+    """
+    import json, sys
+    sys.modules["monster_etl_spark"] = None  # any import attempt fails
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    out = {}
+    for name, blob in cloudpickle.loads(sys.stdin.buffer.read()):
+        try:
+            kernel, batch, mapped = cloudpickle.loads(blob)
+            rows = (pd.concat(list(kernel(iter([batch.copy()])))) if mapped
+                    else kernel(batch.copy()))
+            out[name] = rows.to_dict("list")
+        except Exception as e:
+            out[name] = f"{type(e).__name__}: {e}"
+    print(json.dumps(out))
+    """
+)
+
+
+def test_similarity_kernels_run_without_the_package(tmp_path):
+    """The Arrow kNN and cell-pair kernels, and the fold they capture,
+    ship by value: in a child that cannot import the package they emit
+    exactly the rows they emit here."""
+    kernels = _kernels()
+    payload = cloudpickle.dumps(
+        [(name, cloudpickle.dumps((k, batch, mapped))) for name, k, batch, mapped in kernels]
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _KERNEL_CHILD],
+        input=payload,
+        capture_output=True,
+        cwd=tmp_path,
+        env=_child_env(),
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    got = json.loads(proc.stdout.decode().strip().splitlines()[-1])
+    for name, k, batch, mapped in kernels:
+        want = _run_kernel(k, batch, mapped)
+        assert want[next(iter(want))], f"{name}: no rows, the check is vacuous"
+        assert got[name] == json.loads(json.dumps(want)), (name, got[name])
 
 
 _DRIVER = textwrap.dedent(
