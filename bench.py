@@ -359,7 +359,76 @@ def _normalize_plan(s: str) -> str:
     s = re.sub(r"\bid=#?\d+", "id=x", s)
     s = re.sub(r"0x[0-9a-fA-F]+", "0xX", s)
     s = re.sub(r"\[codegen id : \d+\]", "[codegen id : x]", s)
-    return s
+    return _canonical_distinct_groups(s)
+
+
+def _split_top(s: str) -> list[str]:
+    """Items of a plan list: ``s`` split at commas outside any brackets."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        depth += (ch in "([") - (ch in ")]")
+        if ch == "," and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+    return out + [s[start:].strip()]
+
+
+def _canonical_distinct_groups(s: str) -> str:
+    """Renumber the distinct-aggregate groups of a normalized plan in name
+    order.
+
+    ``RewriteDistinctAggregates`` orders its distinct groups (the Expand
+    projections and their ``gid``) by exprId hashes, so one query built
+    after a different history plans them in another order. The Expand's
+    output names the group columns before ``gid#x``; every list that
+    carries them before ``gid#x`` (keys, sort orders, partitioning, the
+    projections) gets them in sorted order, and each ``gid`` literal the
+    number its group has in that order."""
+    import re
+
+    m = re.search(r"Expand \[\[.*\]\], \[(.*)\]$", s, flags=re.M)
+    if not m or "gid#x" not in (out := _split_top(m.group(1))):
+        return s
+    n = out.index("gid#x")
+    cols = out[:n]
+    order = sorted(range(n), key=cols.__getitem__)
+    sets = {}  # gid literal -> the group columns its projection sets
+    for proj in re.findall(r"\[([^\[\]]*)\]", m.group(0)):
+        items = _split_top(proj)
+        if len(items) > n and items[n].isdigit():
+            sets[items[n]] = sorted(c for c, v in zip(cols, items) if v != "null")
+    gid = dict(zip(sorted(sets, key=sets.__getitem__), sorted(sets, key=int)))
+
+    def fix(items: list[str]) -> list[str]:
+        for k in range(n, len(items)):
+            if items[k].split(" ")[0] == "gid#x" or (
+                k == n and items[k] in gid and all(v in ("null", c) for v, c in zip(items, cols))
+            ):
+                items = items[: k - n] + [items[k - n + i] for i in order] + items[k:]
+                items[k] = gid.get(items[k], items[k])
+                return items
+        lits = [_split_top(i[1:-1])[n:n + 1] if i[:1] == "[" else [] for i in items]
+        if all(lit and lit[0] in gid for lit in lits):  # the Expand's projections
+            return [i for _, i in sorted(zip((int(lit[0]) for lit in lits), items))]
+        return items
+
+    def rewrite(line: str) -> str:
+        stack: list[list[str]] = [[]]
+        for ch in line:
+            if ch in "([":
+                stack.append([ch])
+            elif ch in ")]" and len(stack) > 1:
+                opener, *inner = stack.pop()
+                items = _split_top("".join(inner))
+                fixed = fix(items)
+                stack[-1].append(opener + ("".join(inner) if fixed == items else ", ".join(fixed)) + ch)
+            else:
+                stack[-1].append(ch)
+        if len(stack) > 1:
+            return line
+        return re.sub(r"\(gid#x = (\d+)\)", lambda g: f"(gid#x = {gid.get(g[1], g[1])})", "".join(stack[0]))
+
+    return "\n".join(rewrite(x) if "gid#x" in x else x for x in s.split("\n"))
 
 
 def _plan_hash(df) -> str | None:
@@ -378,8 +447,9 @@ def _plan_hash(df) -> str | None:
 
 def _session_fingerprint(spark) -> dict:
     """The config axes that have historically moved wall-clock between
-    rounds (r5: initialPartitionNum; r7: driver heap) — recorded in the
-    sidecar so a config-driven delta is attributable from the JSON alone."""
+    rounds (r5: initialPartitionNum; r7: driver heap; file split sizing via
+    the per-file open cost) — recorded in the sidecar so a config-driven
+    delta is attributable from the JSON alone."""
     conf = spark.conf
     return {
         "driver_memory": spark.sparkContext.getConf().get("spark.driver.memory", "?"),
@@ -387,6 +457,7 @@ def _session_fingerprint(spark) -> dict:
         "initial_partitions": conf.get(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
         ),
+        "file_open_cost": conf.get("spark.sql.files.openCostInBytes"),
         "master": spark.sparkContext.master,
     }
 

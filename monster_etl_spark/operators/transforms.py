@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from monster_etl_spark.sql import quote_ident
+
 
 def _present(df: DataFrame, cols: Iterable[str]) -> list[str]:
     """Columns from ``cols`` present in ``df``'s schema, in schema order.
@@ -141,70 +143,113 @@ def map_field_values(
 
 # --------------------------------------------------------------------------
 # T9-T13: typed parses
+#
+# Each builder returns parsed SQL over ``operand``, itself SQL: a column
+# name quoted by ``quote_ident`` or another builder's output. That is how
+# ``plans.v2f.transform_table`` composes a column's stages into one
+# projection, and a whole parse chain costs one py4j trip instead of a
+# Column tree per field.
 # --------------------------------------------------------------------------
 
 
-def _nan_to_null(col: Column, nan_values: Iterable[str]) -> Column:
+def _sql_str(s: str) -> str:
+    """A SQL string literal holding exactly ``s``."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+_TRAILING_DOT_ZERO = _sql_str(r"\.0$")
+
+
+def _nan_to_null(operand: str, nan_values: Iterable[str]) -> str:
     nans = list(nan_values)
     if not nans:
-        return col
+        return operand
     # Reference rewrites nan-sentinels to the literal string "nan" inside
     # numeric fields (MsgTransformations.scala:236-248); a relational column
     # is homogeneous, so we represent the sentinel as NULL (SURVEY.md §7.3.1).
-    return F.when(col.isin(*nans), F.lit(None)).otherwise(col)
+    return f"CASE WHEN {operand} IN ({', '.join(map(_sql_str, nans))}) THEN NULL ELSE {operand} END"
 
 
-def _named_strict_cast(c: Column, dtype: T.DataType, field: str | None) -> Column:
+def _named_strict_cast(operand: str, dtype: str, field: str | None) -> str:
     """Strict cast that names the offending field on failure, like the
     reference's parse wrapper (``MsgTransformations.scala:216-221``:
     failures carry the field so a 100-column pipeline error is actionable).
-    Pure column expressions (try_cast + conditional raise_error) — stays
-    inside whole-stage codegen, no UDF."""
+    Pure expressions (try_cast + conditional raise_error) — stays inside
+    whole-stage codegen, no UDF."""
     if field is None:
-        return c.cast(dtype)
-    casted = c.try_cast(dtype)
-    return F.when(
-        c.isNotNull() & casted.isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit(f"failed to parse field '{field}' as {dtype.simpleString()}: value '"),
-                c,
-                F.lit("'"),
-            )
-        ),
-    ).otherwise(casted)
+        return f"CAST({operand} AS {dtype})"
+    casted = f"try_cast({operand} AS {dtype})"
+    msg = _sql_str(f"failed to parse field '{field}' as {dtype}: value '")
+    return (
+        f"CASE WHEN {operand} IS NOT NULL AND {casted} IS NULL"
+        f" THEN raise_error(concat({msg}, {operand}, '\\'')) ELSE {casted} END"
+    )
+
+
+def _parse_numeric_expr(
+    operand: str, dtype: str, nan_values: Iterable[str], strict: bool, field: str | None
+) -> str:
+    c = _nan_to_null(operand, nan_values)
+    if dtype == "bigint":
+        c = f"regexp_replace({c}, {_TRAILING_DOT_ZERO}, '')"
+    return _named_strict_cast(c, dtype, field) if strict else f"try_cast({c} AS {dtype})"
 
 
 def parse_long_expr(
-    col: Column, nan_values: Iterable[str] = (), strict: bool = True, field: str | None = None
-) -> Column:
+    operand: str, nan_values: Iterable[str] = (), strict: bool = True, field: str | None = None
+) -> str:
     """Scalar of T9: strip one trailing ``.0`` then cast to long
     (``MsgTransformations.scala:236-248``; ``"184305.0"`` -> 184305)."""
-    c = _nan_to_null(col, nan_values)
-    stripped = F.regexp_replace(c, r"\.0$", "")
-    if strict:
-        return _named_strict_cast(stripped, T.LongType(), field)
-    return stripped.try_cast(T.LongType())
+    return _parse_numeric_expr(operand, "bigint", nan_values, strict, field)
 
 
 def parse_double_expr(
-    col: Column, nan_values: Iterable[str] = (), strict: bool = True, field: str | None = None
-) -> Column:
+    operand: str, nan_values: Iterable[str] = (), strict: bool = True, field: str | None = None
+) -> str:
     """Scalar of T10 (``MsgTransformations.scala:259-265``)."""
-    c = _nan_to_null(col, nan_values)
-    if strict:
-        return _named_strict_cast(c, T.DoubleType(), field)
-    return c.try_cast(T.DoubleType())
+    return _parse_numeric_expr(operand, "double", nan_values, strict, field)
 
 
-def parse_boolean_expr(col: Column, true_values: Iterable[str] = ("true",)) -> Column:
+def parse_boolean_expr(operand: str, true_values: Iterable[str] = ("true",)) -> str:
     """Scalar of T11: boolean by *membership*, NOT cast
     (``MsgTransformations.scala:276-277``): value in ``true_values`` ->
     true, anything else -> false, NULL -> NULL. So ``"1"`` is false under
     the default set — pinned by the reference's golden output
     (``outputs/variant-effect/regulatory-feature-consequences/part-00000-of-00004.json:1``).
+    An empty ``true_values`` makes every value false, NULL included.
     """
-    return col.isin(*list(true_values))
+    values = ", ".join(map(_sql_str, true_values))
+    return f"({operand} IN ({values}))" if values else "false"
+
+
+def parse_string_array_expr(operand: str, delimiter: str) -> str:
+    """Scalar of T12: split with Java ``String.split`` semantics (the
+    reference calls it at ``MsgTransformations.scala:294``): trailing empty
+    strings are dropped (``"a,,".split(",") == ["a"]``,
+    ``",,".split(",") == []``), while leading/middle empties are kept.
+    Spark's ``split`` keeps trailing empties, so we strip trailing
+    delimiters first.
+    """
+    pat = re.escape(delimiter)
+    stripped = f"regexp_replace({operand}, {_sql_str(f'(?:{pat})+$')}, '')"
+    return (
+        f"CASE WHEN {operand} IS NULL THEN CAST(NULL AS ARRAY<STRING>)"
+        f" WHEN {stripped} = '' AND {operand} != '' THEN CAST(array() AS ARRAY<STRING>)"
+        f" ELSE split({stripped}, {_sql_str(pat)}) END"
+    )
+
+
+def parse_array_expr(operand: str, delimiter: str, parse_elem: Callable[[str], str]) -> str:
+    """Scalar of T13: split like T12, then parse each element with
+    ``parse_elem`` (a scalar builder applied to the lambda variable)."""
+    return f"transform({parse_string_array_expr(operand, delimiter)}, x -> {parse_elem('x')})"
+
+
+def _with_parsed(df: DataFrame, fields: Iterable[str], build: Callable[[str, str], str]) -> DataFrame:
+    """Replace each present column ``c`` with the parsed SQL
+    ``build(quote_ident(c), c)``; absent columns skipped."""
+    cols = _present(df, fields)
+    return df.withColumns({c: F.expr(build(quote_ident(c), c)) for c in cols}) if cols else df
 
 
 def parse_longs(
@@ -212,12 +257,7 @@ def parse_longs(
 ) -> DataFrame:
     """T9 ``parseLongs`` (``MsgTransformations.scala:309-312``). Strict
     failures name the offending field (reference parity)."""
-    cols = _present(df, fields)
-    if not cols:
-        return df
-    return df.withColumns(
-        {c: parse_long_expr(F.col(c), nan_values, strict, field=c) for c in cols}
-    )
+    return _with_parsed(df, fields, lambda q, c: parse_long_expr(q, nan_values, strict, field=c))
 
 
 def parse_doubles(
@@ -225,35 +265,14 @@ def parse_doubles(
 ) -> DataFrame:
     """T10 ``parseDoubles`` (``MsgTransformations.scala:325-328``). Strict
     failures name the offending field (reference parity)."""
-    cols = _present(df, fields)
-    if not cols:
-        return df
-    return df.withColumns(
-        {c: parse_double_expr(F.col(c), nan_values, strict, field=c) for c in cols}
-    )
+    return _with_parsed(df, fields, lambda q, c: parse_double_expr(q, nan_values, strict, field=c))
 
 
 def parse_booleans(
     df: DataFrame, fields: Iterable[str], true_values: Iterable[str] = ("true",)
 ) -> DataFrame:
     """T11 ``parseBooleans`` (``MsgTransformations.scala:340-343``)."""
-    return map_field_values(df, fields, lambda c: parse_boolean_expr(c, true_values))
-
-
-def _java_split(c: Column, delimiter: str) -> Column:
-    """Split with Java ``String.split`` semantics (the reference calls it at
-    ``MsgTransformations.scala:294``): trailing empty strings are dropped
-    (``"a,,".split(",") == ["a"]``, ``",,".split(",") == []``), while
-    leading/middle empties are kept. Spark's ``split`` keeps trailing
-    empties, so we strip trailing delimiters first.
-    """
-    pat = re.escape(delimiter)
-    stripped = F.regexp_replace(c, f"(?:{pat})+$", "")
-    return (
-        F.when(c.isNull(), F.lit(None).cast(T.ArrayType(T.StringType())))
-        .when((stripped == "") & (c != ""), F.array().cast(T.ArrayType(T.StringType())))
-        .otherwise(F.split(stripped, pat))
-    )
+    return _with_parsed(df, fields, lambda q, _: parse_boolean_expr(q, true_values))
 
 
 def parse_string_arrays(df: DataFrame, fields: Iterable[str], delimiter: str) -> DataFrame:
@@ -261,36 +280,7 @@ def parse_string_arrays(df: DataFrame, fields: Iterable[str], delimiter: str) ->
 
     Split a string column on a literal delimiter into array<string>.
     """
-    return map_field_values(df, fields, lambda c: _java_split(c, delimiter))
-
-
-def _parse_numeric_arrays(
-    df: DataFrame,
-    fields: Iterable[str],
-    delimiter: str,
-    nan_values: Iterable[str],
-    dtype: T.DataType,
-    strict: bool,
-) -> DataFrame:
-    nans = list(nan_values)
-
-    def elem(x: Column, field: str) -> Column:
-        e = F.when(x.isin(*nans), F.lit(None)).otherwise(x) if nans else x
-        if dtype == T.LongType():
-            e = F.regexp_replace(e, r"\.0$", "")
-        return _named_strict_cast(e, dtype, field) if strict else e.try_cast(dtype)
-
-    def elem_fn(field: str):
-        # one-arg lambda per field (a two-arg lambda would be read by
-        # F.transform as the (element, index) form)
-        return lambda x: elem(x, field)
-
-    cols = _present(df, fields)
-    if not cols:
-        return df
-    return df.withColumns(
-        {c: F.transform(_java_split(F.col(c), delimiter), elem_fn(c)) for c in cols}
-    )
+    return _with_parsed(df, fields, lambda q, _: parse_string_array_expr(q, delimiter))
 
 
 def parse_long_arrays(
@@ -305,7 +295,8 @@ def parse_long_arrays(
     Heterogeneous-sentinel caveat: reference keeps literal ``"nan"`` strings
     inside numeric arrays; we emit NULL elements (SURVEY.md §7.3.1).
     """
-    return _parse_numeric_arrays(df, fields, delimiter, nan_values, T.LongType(), strict)
+    return _with_parsed(df, fields, lambda q, c: parse_array_expr(
+        q, delimiter, lambda x: parse_long_expr(x, nan_values, strict, field=c)))
 
 
 def parse_double_arrays(
@@ -316,7 +307,8 @@ def parse_double_arrays(
     strict: bool = True,
 ) -> DataFrame:
     """T13 ``parseDoubleArrays`` (``MsgTransformations.scala:388-393``)."""
-    return _parse_numeric_arrays(df, fields, delimiter, nan_values, T.DoubleType(), strict)
+    return _with_parsed(df, fields, lambda q, c: parse_array_expr(
+        q, delimiter, lambda x: parse_double_expr(x, nan_values, strict, field=c)))
 
 
 # --------------------------------------------------------------------------

@@ -26,17 +26,19 @@ from monster_etl_spark.naming import columns_to_snake_case
 from monster_etl_spark.operators.transforms import (
     distinct_by,
     extract_fields,
-    parse_booleans,
-    parse_double_arrays,
-    parse_doubles,
+    parse_array_expr,
+    parse_boolean_expr,
+    parse_double_expr,
+    parse_long_expr,
     parse_longs,
-    parse_string_arrays,
+    parse_string_array_expr,
     remove_fields,
     rename_fields,
     union_all,
 )
 from monster_etl_spark.sources.jsonl import read_json_lines, write_json_lines
 from monster_etl_spark.sources.tsv import read_tsv
+from monster_etl_spark.sql import quote_ident
 
 # ---------------------------------------------------------------------------
 # Table configs (V2FConstants.scala:71-287). Names are post-snake-case.
@@ -176,18 +178,36 @@ def extract_and_convert(
 
 
 def transform_table(df: DataFrame, config: TableConfig, strict: bool = True) -> DataFrame:
-    """P2 ``transform`` (``V2FExtractionsAndTransforms.scala:77-122``)."""
+    """P2 ``transform`` (``V2FExtractionsAndTransforms.scala:77-122``).
+
+    After the rename, one projection: each column's remaining stages
+    compose in the reference order as nested parsed SQL, built in one py4j
+    trip instead of one analysed frame per stage. The rename stays its own
+    metadata-only step so Catalyst places its aliases exactly where it
+    places them for the stage-by-stage chain (same plan)."""
     df = rename_fields(df, config.fields_to_rename)
-    df = remove_fields(df, config.fields_to_remove)
-    df = parse_doubles(df, config.fields_to_double, strict=strict)
-    df = parse_longs(df, config.fields_to_long, strict=strict)
-    df = parse_booleans(df, config.fields_to_boolean, config.boolean_true_values)
-    for delim, fields in config.string_array_fields.items():
-        df = parse_string_arrays(df, fields, delim)
-    for delim, fields in config.double_array_fields.items():
-        # nan sentinel "." hardcoded in the reference at :113-117
-        df = parse_double_arrays(df, fields, delim, nan_values=config.nan_values or {"."}, strict=strict)
-    return df
+    nan_values = config.nan_values or {"."}  # hardcoded in the reference at :113-117
+    exprs = []
+    for name in df.columns:
+        if name in config.fields_to_remove:
+            continue
+        e = quote_ident(name)
+        if name in config.fields_to_double:
+            e = parse_double_expr(e, strict=strict, field=name)
+        if name in config.fields_to_long:
+            e = parse_long_expr(e, strict=strict, field=name)
+        if name in config.fields_to_boolean:
+            e = parse_boolean_expr(e, config.boolean_true_values)
+        for delim, fields in config.string_array_fields.items():
+            if name in fields:
+                e = parse_string_array_expr(e, delim)
+        for delim, fields in config.double_array_fields.items():
+            if name in fields:
+                e = parse_array_expr(
+                    e, delim, lambda x: parse_double_expr(x, nan_values, strict, field=name)
+                )
+        exprs.append(e if e == quote_ident(name) else f"{e} AS {quote_ident(name)}")
+    return df.selectExpr(*exprs)
 
 
 # ---------------------------------------------------------------------------

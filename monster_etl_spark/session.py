@@ -109,6 +109,21 @@ def get_spark(
         # cannot fix per-operator serialization; the remaining serial
         # tails are accepted (or spread at the operator where safe).
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
+        # File splits are max(openCost, (bytes + files x openCost) / cores),
+        # capped at maxPartitionBytes: with the 4m default a 6 MB TSV scans
+        # (and its JSON output writes) as 2 tasks on 4 cores; at 1m, 4.
+        # Interleaved A/B on a 4-core box, perfbench etl_write (seeds
+        # 21-25, 5 rounds), pass_s median: 4m 3.10 s, 1m 2.45 s, 512k
+        # 2.19 s; 1m and 512k both beat 4m in 5/5. 1m vs 512k over 10
+        # rounds (seeds 21-30): 2.29 vs 2.09 s, 512k lower in 7/10 only
+        # (it cuts the 6.2 MB file into 3 x 1.68 + 1.16 MB, 1m into
+        # 3 x 1.82 + 0.77 MB), not the 9/10 a kept gain needs, so the
+        # value nearer the default stays. Cost at
+        # scale: once bytes/cores passes 128 MB this line no longer sets
+        # the split size, but every file is charged 1m instead of 4m when
+        # files are packed into a task, so a layout of many small files
+        # packs up to 4x more of them per task.
+        .config("spark.sql.files.openCostInBytes", "1m")
         # PySpark 4's DataFrame-debugging wrapper adds ~3 py4j round
         # trips (conf.get + origin set/clear) plus a Python stack walk to
         # EVERY Column/DataFrame API call; expression-dense operators pay

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from monster_etl_spark.fsutil import list_files, read_head
 from monster_etl_spark.operators.transforms import union_all
@@ -87,10 +88,11 @@ def read_tsv(
     tuple (``V2FUtils.scala:71``).
     """
     if "://" in path and not path.startswith("file://"):
-        # Non-local storage (s3a://, gs://, hdfs://...): the driver cannot
-        # peek at file headers, so delegate wholly to Spark's distributed
-        # reader. One header per glob is assumed (the overwhelmingly common
-        # layout); the heterogeneous-header union is a local-path feature.
+        # Non-local storage (s3a://, gs://, hdfs://...): delegate wholly to
+        # Spark's distributed reader, which reads the header itself. One
+        # header per glob is assumed (the overwhelmingly common layout); the
+        # heterogeneous-header union is a local-path feature, though
+        # fsutil.read_head reads any Hadoop filesystem and could extend it.
         df = (
             spark.read.option("header", True)
             .option("sep", sep)
@@ -118,18 +120,18 @@ def read_tsv(
 
     parts: list[DataFrame] = []
     for header, group in headers.items():
+        # the trimmed header is the schema: Spark skips each file's first
+        # line and launches no job to read it while the plan is built
         df = (
-            spark.read.option("header", True)
+            spark.read.schema(T.StructType([T.StructField(c, T.StringType()) for c in header]))
+            .option("header", True)
             .option("sep", sep)
-            .option("inferSchema", False)
             # trim-then-null: both "" and whitespace-only cells are absent
             .option("ignoreLeadingWhiteSpace", True)
             .option("ignoreTrailingWhiteSpace", True)
             .option("nullValue", "")
             .csv(group)
         )
-        # normalize to the trimmed header names
-        df = df.toDF(*header)
         if with_provenance:
             df = df.withColumn(_PROVENANCE_COL, F.input_file_name())
         parts.append(df)

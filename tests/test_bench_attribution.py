@@ -248,6 +248,53 @@ def test_normalize_plan_strips_session_noise():
     assert a != bench._normalize_plan(a.replace("Parquet", "Orc"))
 
 
+_DISTINCT_PLAN = """\
+HashAggregate(keys=[f#8], functions=[count(ok#0L) FILTER (WHERE (gid#20 = {ok})), \
+count(pk#1L) FILTER (WHERE (gid#20 = {pk}))], output=[f#8, count#30L, count#31L])
++- Exchange hashpartitioning({cols}, 4), ENSURE_REQUIREMENTS, [plan_id=3]
+   +- Expand [{projections}], [{cols}]"""
+
+
+def _distinct_plan(first, ok_gid=None):
+    """A two-group RewriteDistinctAggregates plan with group ``first``
+    numbered 1."""
+    attrs = {"ok": "ok#21L", "pk": "pk#22L"}
+    second = "pk" if first == "ok" else "ok"
+    cols = f"{attrs[first]}, {attrs[second]}, f#8, gid#20"
+    projections = f"[{attrs[first]}, null, f#8, 1], [null, {attrs[second]}, f#8, 2]"
+    gids = {first: 1, second: 2}
+    if ok_gid:
+        gids["ok"] = ok_gid
+    return _DISTINCT_PLAN.format(cols=cols, projections=projections, **gids)
+
+
+def test_normalize_plan_orders_distinct_groups():
+    """The same distinct-aggregate plan with its groups numbered in either
+    order (it follows exprId hashes) normalizes to one string; counting a
+    column under the other group's gid stays a different plan."""
+    a, b = (bench._normalize_plan(_distinct_plan(f)) for f in ("ok", "pk"))
+    assert a == b
+    assert "Expand [[f#x, ok#x, null, 1], [f#x, null, pk#x, 2]], [f#x, ok#x, pk#x, gid#x]" in a
+    assert "hashpartitioning(f#x, ok#x, pk#x, gid#x, 4)" in a
+    assert bench._normalize_plan(_distinct_plan("ok", ok_gid=2)) != a
+
+
+def test_distinct_aggregate_plan_hashes_independent_of_session_history(spark, sf_dir):
+    """``q_approx_distinct`` and ``q_profile`` hash the same whatever the
+    session built before them."""
+    from monster_etl_spark.queries import all_queries
+
+    registry = all_queries()
+    prefix = sorted(registry)[:7]
+    hashes = {"q_approx_distinct": set(), "q_profile": set()}
+    for k in (0, 3, 7):
+        for name in prefix[:k]:
+            registry[name].fn(spark, sf_dir)
+        for name, seen in hashes.items():
+            seen.add(bench._plan_hash(registry[name].fn(spark, sf_dir)))
+    assert all(len(seen) == 1 and None not in seen for seen in hashes.values()), hashes
+
+
 def test_plan_hash_stable_within_session(spark):
     import pyspark.sql.functions as F
 
@@ -301,6 +348,19 @@ def test_regression_names_session_config_change(spark):
     )
     assert deltas["qx"]["cause"].startswith("session-config-change")
     assert "driver_memory" in deltas["qx"]["cause"]
+
+
+def test_session_fingerprint_records_file_open_cost(spark):
+    """Split sizing follows ``spark.sql.files.openCostInBytes``; a delta it
+    causes is named from the sidecar alone."""
+    fp = bench._session_fingerprint(spark)
+    assert fp["file_open_cost"] == spark.conf.get("spark.sql.files.openCostInBytes")
+    deltas = bench._attribute_deltas(
+        _prev({"qx": 0.0001}, session=dict(fp, file_open_cost="4194304")), {"qx": 5.0},
+        _fake_registry(spark), spark, "unused", fp, None,
+    )
+    assert deltas["qx"]["cause"].startswith("session-config-change")
+    assert "file_open_cost" in deltas["qx"]["cause"]
 
 
 def test_regression_names_stage_metric_shift(spark):

@@ -5,7 +5,7 @@ generated rows) keeps runtime sane."""
 
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from monster_etl_spark.naming import to_snake_case
@@ -175,3 +175,138 @@ def test_bpe_self_pair_run_semantics_pinned():
     assert two_pass(5) == "|aa|a|aa|"
     assert two_pass(6) == "|aa|a|aa|a|"
     assert two_pass(8) == "|aa|a|aa|a|aa|"
+
+
+# --- transform_table: one projection == the stage-by-stage chain ----------
+
+_COLS = ("a", "b", "c", "d")
+_TARGETS = ("r1", "r2")
+_CELLS = (None, "", "1", "-2", "3.0", "1.5", ".", "R", "true", "x", "1,2", "1,.,2.5", "4,,", ",")
+
+
+def _stage_chain(df, config, strict):
+    """``transform_table`` as the composition of the public per-operator
+    functions, one analysed frame per stage, in the reference order."""
+    df = tr.rename_fields(df, config.fields_to_rename)
+    df = tr.remove_fields(df, config.fields_to_remove)
+    df = tr.parse_doubles(df, config.fields_to_double, strict=strict)
+    df = tr.parse_longs(df, config.fields_to_long, strict=strict)
+    df = tr.parse_booleans(df, config.fields_to_boolean, config.boolean_true_values)
+    for delim, fields in config.string_array_fields.items():
+        df = tr.parse_string_arrays(df, fields, delim)
+    for delim, fields in config.double_array_fields.items():
+        df = tr.parse_double_arrays(
+            df, fields, delim, nan_values=config.nan_values or {"."}, strict=strict
+        )
+    return df
+
+
+def _outcome(build):
+    """(column names and types, rows) of the built frame, or the error:
+    the field a strict parse names, else the exception type."""
+    try:
+        df = build()
+        return df.dtypes, [tuple(r) for r in df.collect()]
+    except Exception as e:  # noqa: BLE001 - the error itself is compared
+        named = re.search(r"failed to parse field '([^']*)'", str(e))
+        return ("error", named.group(1) if named else type(e).__name__)
+
+
+@st.composite
+def _tables(draw):
+    from monster_etl_spark.config import TableConfig
+
+    cols = draw(st.lists(st.sampled_from(_COLS), min_size=1, max_size=4, unique=True))
+    rows = draw(st.lists(st.tuples(*[st.sampled_from(_CELLS)] * len(cols)), min_size=1, max_size=4))
+    olds = draw(st.lists(st.sampled_from(cols), max_size=2, unique=True))
+    fresh = [t for t in _TARGETS + _COLS if t not in cols]
+    news = draw(st.lists(st.sampled_from(fresh), min_size=len(olds), max_size=len(olds), unique=True))
+    names = st.frozensets(st.sampled_from(_COLS + _TARGETS), max_size=3)
+    # a column takes at most one typed stage, double-and-long aside:
+    # chaining e.g. a long into a membership test against 'R' makes an
+    # ANSI cast error whose timing depends on the plan shape
+    doubles, longs = draw(names), draw(names)
+    taken = set(doubles | longs)
+
+    def untaken(drawn):
+        fresh = drawn - taken
+        taken.update(fresh)
+        return fresh
+
+    booleans = untaken(draw(names))
+    string_arrays = {d: untaken(f) for d, f in draw(st.dictionaries(st.sampled_from((",", ".")), names, max_size=2)).items()}
+    double_arrays = {d: untaken(f) for d, f in draw(st.dictionaries(st.sampled_from((",", ":")), names, max_size=2)).items()}
+    config = TableConfig(
+        table_name="t",
+        fields_to_rename=dict(zip(olds, news)),
+        fields_to_remove=draw(names),
+        fields_to_double=doubles,
+        fields_to_long=longs,
+        fields_to_boolean=booleans,
+        boolean_true_values=draw(st.frozensets(st.sampled_from(("R", "true", "1")), min_size=1)),
+        string_array_fields=string_arrays,
+        double_array_fields=double_arrays,
+        nan_values=draw(st.frozensets(st.sampled_from((".", "x")), max_size=1)),
+    )
+    return cols, rows, config, draw(st.booleans())
+
+
+def _cfg(**kw):
+    from monster_etl_spark.config import TableConfig
+
+    return TableConfig(table_name="t", **kw)
+
+
+@given(_tables())
+@example((["a", "b"], [("x", "2.0")], _cfg(fields_to_remove={"a"}, fields_to_long={"a", "b"}), True))
+@example((["a"], [("3.0",), ("x",)], _cfg(fields_to_rename={"a": "r1"}, fields_to_long={"r1"}), True))
+@example((["a"], [("3.0",), (None,)], _cfg(fields_to_double={"a"}, fields_to_long={"a"}), True))
+@example((["a"], [("3.0",), ("1.5",)], _cfg(fields_to_double={"a"}, fields_to_long={"a"}), True))
+@example((["a"], [("1.5",)], _cfg(fields_to_double={"a"}, fields_to_long={"a"}), False))
+@example(
+    (["a", "b"], [("1,.,2.5", "x,,y,"), (None, "")],
+     _cfg(double_array_fields={",": {"a"}}, string_array_fields={",": {"b"}}), True)
+)
+@example((["a"], [("1,x",)], _cfg(double_array_fields={",": {"a"}}), True))
+@example((["a", "b", "d", "c"], [(None, None, None, None), (None, None, "", None), (None, "1.5", "", None)],
+          _cfg(fields_to_long={"b", "d"}), True))
+@example((["a", "b"], [("", "1.5")], _cfg(fields_to_long={"b"}, double_array_fields={",": {"a"}}), True))
+@settings(max_examples=40, deadline=None)
+def test_transform_table_matches_stage_chain(spark_global, table):
+    """The one-projection ``transform_table`` gives the columns, rows and
+    strict-parse error of the stage-by-stage chain for any config: removal
+    wins over parse, a renamed column takes the new name's parses, a column
+    in both the double and the long sets is parsed twice, arrays split."""
+    from pyspark.sql import types as T
+
+    from monster_etl_spark.plans.v2f import transform_table
+
+    cols, rows, config, strict = table
+    df = spark_global.createDataFrame(
+        rows, T.StructType([T.StructField(c, T.StringType()) for c in cols])
+    )
+    want = _outcome(lambda: _stage_chain(df, config, strict))
+    got = _outcome(lambda: transform_table(df, config, strict))
+    if want != got and want[0] == got[0] == "error":
+        # Spark fixes no order among failing rows and columns (the task
+        # that fails first names its field, so one plan run twice can name
+        # two fields): each side must name a field whose own parse fails
+        chain = _stage_chain(df, config, strict)
+        failing = {o[1] for c in chain.columns if (o := _outcome(lambda: chain.select(c)))[0] == "error"}
+        assert {want[1], got[1]} <= failing
+    else:
+        assert got == want
+
+
+def test_p2_transform_chain_plan_unchanged(spark, sf_dir, monkeypatch):
+    """``p2_transform_chain`` plans exactly as it did over the
+    stage-by-stage chain."""
+    import bench
+    from monster_etl_spark.queries import refops_queries
+
+    got = bench._plan_hash(refops_queries.p2_transform_chain(spark, sf_dir))
+    monkeypatch.setattr(
+        refops_queries, "transform_table", lambda df, config: _stage_chain(df, config, True)
+    )
+    want = bench._plan_hash(refops_queries.p2_transform_chain(spark, sf_dir))
+    assert want is not None and got == want

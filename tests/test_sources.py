@@ -48,6 +48,65 @@ def test_tsv_header_only_and_empty_alone(spark, fixture_dir):
     assert read_tsv(spark, f"{fixture_dir}/completely_empty.tsv").count() == 0
 
 
+def test_tsv_padded_header_short_row_and_empty_files(spark, tmp_path):
+    # whitespace-padded header names read as the trimmed names; a short row
+    # gets trailing NULLs; a header-only file and a 0-byte file in the same
+    # glob add no rows
+    _tsv(tmp_path / "padded.tsv", " key1 \t  key2\tkey3  \nv1\tv2\tv3\ns1\n")
+    _tsv(tmp_path / "z_header_only.tsv", "key1\tkey2\tkey3\n")
+    _tsv(tmp_path / "z_empty.tsv", "")
+    df = read_tsv(spark, f"{tmp_path}/*.tsv")
+    assert df.columns == ["key1", "key2", "key3"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("s1", None, None),
+        ("v1", "v2", "v3"),
+    ]
+    assert read_tsv(spark, f"{tmp_path}/z_*.tsv").count() == 0
+
+
+def _jobs_while(spark, build):
+    """Spark jobs launched while ``build()`` runs on this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup("build-only", "plan build")
+    try:
+        build()
+        return list(sc.statusTracker().getJobIdsForGroup("build-only"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_tsv_transform_build_launches_no_job(spark, tmp_path):
+    """The driver already read the header, so building the whole v2f
+    chain over a local TSV reads no data: no Spark job."""
+    from monster_etl_spark.config import TableConfig
+    from monster_etl_spark.naming import columns_to_snake_case
+    from monster_etl_spark.plans.v2f import transform_table
+
+    _tsv(tmp_path / "t.tsv", "OrderKey\tQty\tFlag\n1\t2.0\tR\n")
+    config = TableConfig(
+        table_name="t",
+        fields_to_rename={"order_key": "id"},
+        fields_to_long={"id", "qty"},
+        fields_to_boolean={"flag"},
+        boolean_true_values=frozenset({"R"}),
+    )
+
+    def build():
+        return transform_table(columns_to_snake_case(read_tsv(spark, f"{tmp_path}/t.tsv")), config)
+
+    assert _jobs_while(spark, build) == []
+    assert [tuple(r) for r in build().collect()] == [(1, 2, True)]
+
+
+def test_small_tsv_scan_fills_the_cores(spark, tmp_path):
+    # a ~6 MB single file splits into at least one task per core of the
+    # local[4] test session
+    row = "\t".join(["1234567890"] * 8) + "\n"
+    _tsv(tmp_path / "big.tsv", "\t".join(f"c{i}" for i in range(8)) + "\n" + row * 70_000)
+    assert (tmp_path / "big.tsv").stat().st_size > 6_000_000
+    assert read_tsv(spark, f"{tmp_path}/big.tsv").rdd.getNumPartitions() >= 4
+
+
 def test_tsv_malformed_header_named_in_error(spark, tmp_path):
     # a trailing tab yields an empty column name; duplicates are ambiguous —
     # both must fail driver-side naming the offending file

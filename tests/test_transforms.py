@@ -138,6 +138,9 @@ def test_parse_booleans_custom_true_values(spark):
     df = spark.createDataFrame([("yes",), ("true",)], ["flag"])
     out = tr.parse_booleans(df, {"flag"}, true_values={"yes", "y"})
     assert [r["flag"] for r in rows(out)] == [True, False]
+    # an empty true-set makes every value false, NULL included
+    df = spark.createDataFrame([("yes",), (None,)], "flag string")
+    assert [r["flag"] for r in rows(tr.parse_booleans(df, {"flag"}, true_values=()))] == [False, False]
 
 
 def test_parse_string_arrays(spark):
