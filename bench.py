@@ -5,7 +5,9 @@ final JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 (the driver's capture keeps only the last ~2000 chars of stdout): when the
 full per-query dict would overflow that budget, the line carries the
 slowest queries plus a count, and the COMPLETE result — per-query timings,
-per-run spread, the scale sweep, stage metrics, scaling exponents — is
+per-run spread, the scale sweep, stage metrics (each soak query's shuffle
+and spill, read from Spark's in-process status store by
+``monster_etl_spark.metrics``), scaling exponents — is
 written to ``BENCH_SUMMARY.json`` next to this file. One compact
 ``{"sweep_sf": ..., "results": ...}`` progress line is also printed per
 sweep scale factor as it completes.
@@ -836,9 +838,7 @@ def _time_query(run, snapshot=None, delta=None):
         el = time.perf_counter() - t0
         kept.append(el)
         if el == min(kept) and before is not None:
-            dm = delta(before, snapshot())
-            if dm is not None:
-                best_dm = dm
+            best_dm = delta(before, snapshot())
         return el
 
     first = one()
@@ -1047,11 +1047,7 @@ def main() -> None:
     # the official r9 record absorbed ~1.3x of box load invisibly)
     box_start = _box_state()
     registry = all_queries()
-    # UI on: per-query shuffle/spill deltas for the sweep's largest sf come
-    # from the /api/v1 status endpoint (monster_etl_spark.metrics)
-    spark = get_spark(
-        app_name="monster-etl-spark-bench", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark(app_name="monster-etl-spark-bench")
 
     # warm-up: JVM + codegen + parquet footer caches
     registry["t3_extract_fields"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -1143,20 +1139,17 @@ def main() -> None:
                     )
                     per[name] = best
                     per_spread[name] = spread
-                    if dm is not None:
-                        sf_metrics[name] = dm
+                    sf_metrics[name] = dm
                 sweep[key] = per
                 sweep_spread[key] = per_spread
-                if sf_metrics:
-                    stage_metrics[key] = sf_metrics
+                stage_metrics[key] = sf_metrics
                 # compact per-sf progress line: survives any tail buffer
                 # even if the process dies mid-sweep
                 print(json.dumps({"sweep_sf": key, "results": per}), flush=True)
-            if stage_metrics:
-                # shuffle bytes written/read + mem/disk spill per soak query
-                # per sf — the "is this disk-bound or plan-defective"
-                # evidence (best-timed attempt's delta)
-                out["stage_metrics"] = stage_metrics
+            # shuffle bytes written/read + mem/disk spill per soak query
+            # per sf — the "is this disk-bound or plan-defective"
+            # evidence (best-timed attempt's delta)
+            out["stage_metrics"] = stage_metrics
             # data skipping must WIN where there are enough files to skip:
             # the pair is re-run at the largest sf with a file count sized
             # to it (the sf0.1 pair in `queries` shows overhead-dominated

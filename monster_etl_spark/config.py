@@ -39,3 +39,23 @@ class TableConfig:
     # raw strings treated as missing in numeric parses (ref hardcodes {"."}
     # for v2f double arrays, V2FExtractionsAndTransforms.scala:113-117).
     nan_values: frozenset[str] = frozenset()
+
+    def __post_init__(self) -> None:
+        # A column takes at most one typed parse (double + long is one
+        # numeric parse): chained differently typed parses, e.g. a long
+        # then a membership test against 'R', fail in the stage chain with
+        # an ANSI cast error whose timing depends on the plan shape.
+        typed = [
+            {*self.fields_to_double, *self.fields_to_long},
+            set(self.fields_to_boolean),
+            *map(set, self.string_array_fields.values()),
+            *map(set, self.double_array_fields.values()),
+        ]
+        seen: set[str] = set()
+        for fields in typed:
+            clash = seen & fields
+            if clash:
+                raise ValueError(
+                    f"{self.table_name}: column '{min(clash)}' is in more than one typed parse"
+                )
+            seen |= fields

@@ -1,26 +1,25 @@
-"""Per-query shuffle/spill accounting from the Spark status REST API.
+"""Per-query jobs, shuffle and spill from Spark's in-process status store.
 
 The round-4 scale soak left one alpha (sf100 q5 at 1.19) attributed to
 "disk-bound single box" by inference, not measurement. This module turns
-that class of call into data: snapshot the cumulative completed-stage
-metrics before and after a query, and the delta is the query's shuffle
-bytes written/read and memory/disk spill.
+that class of call into data: snapshot the status store before and after
+a query, and the jobs between the two snapshots are the query's jobs;
+their stages give its shuffle bytes written/read and memory/disk spill.
 
-Uses the public ``/api/v1`` status endpoint (the same JSON the History
-Server serves), so it works identically on local mode and a real cluster
-driver — no py4j internals. Requires ``spark.ui.enabled=true`` on the
-session; when the UI is off (the engine's default — tests don't want the
-port), ``snapshot`` returns ``None`` and callers skip the accounting.
+It reads the driver's ``AppStatusStore`` (``sc._jsc.sc().statusStore()``),
+the record the UI and the History Server render. The store is kept with
+``spark.ui.enabled=false``, the engine's default, so every session can
+measure; no port is opened and nothing is read over HTTP.
 """
 
 from __future__ import annotations
 
-import json
-import urllib.request
+from typing import NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-# REST field -> short report key
+# status-store stage getter -> short report key
 _FIELDS = {
     "shuffleWriteBytes": "shuffle_write",
     "shuffleReadBytes": "shuffle_read",
@@ -29,48 +28,72 @@ _FIELDS = {
 }
 
 
-def snapshot(spark: SparkSession) -> dict[str, dict[str, int]] | None:
-    """Per-stage-attempt metrics for this application keyed by
-    ``"<stageId>.<attemptId>"``, or ``None`` when the UI/REST server is
-    not running. Keyed (not summed) on purpose: the UI retains a bounded
-    stage list (``spark.ui.retainedStages``), so a cumulative sum can
-    DECREASE when old stages are evicted — deltas must be computed from
-    the stages that are NEW between two snapshots, never from totals."""
+class Snapshot(NamedTuple):
+    """The session's context and the id of the newest job its status
+    store held (-1: none)."""
+
+    sc: SparkContext
+    last_job: int
+
+
+def _jobs_newest_first(sc: SparkContext):
+    """Every retained job, newest first: ``jobsList`` with no status
+    filter. It also lists jobs run under a job group, which
+    ``statusTracker().getJobIdsForGroup(None)`` misses."""
+    it = sc._jsc.sc().statusStore().jobsList(sc._jvm.java.util.ArrayList()).iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def snapshot(spark: SparkSession) -> Snapshot:
+    """Drain the listener bus, then record the newest job id."""
     sc = spark.sparkContext
-    url = sc.uiWebUrl
-    if not url:
-        return None
-    try:
-        with urllib.request.urlopen(
-            f"{url}/api/v1/applications/{sc.applicationId}/stages", timeout=10
-        ) as r:
-            stages = json.load(r)
-    except Exception:
-        return None
-    out: dict[str, dict[str, int]] = {}
-    for s in stages:
-        key = f"{s.get('stageId')}.{s.get('attemptId')}"
-        out[key] = {
-            out_key: int(s.get(rest_key, 0) or 0) for rest_key, out_key in _FIELDS.items()
-        }
-    return out
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    newest = next(_jobs_newest_first(sc), None)
+    return Snapshot(sc, newest.jobId() if newest is not None else -1)
 
 
-def delta(
-    before: dict[str, dict[str, int]] | None, after: dict[str, dict[str, int]] | None
-) -> dict[str, int] | None:
-    """Metrics attributable to the work between two snapshots: the sum
-    over stage attempts present in ``after`` but not ``before`` (queries
-    run sequentially, so those are exactly the measured query's stages;
-    immune to retained-stage eviction shrinking the totals)."""
-    if before is None or after is None:
-        return None
-    out = dict.fromkeys(_FIELDS.values(), 0)
-    for key, m in after.items():
-        if key in before:
+def jobs(before: Snapshot, after: Snapshot) -> list[dict]:
+    """The jobs newer than ``before`` and no newer than ``after``, oldest
+    first: id, submission and completion time in epoch milliseconds,
+    stage ids, task count and description (the call site when unset).
+    The walk stops at the first older job, so only the measured query's
+    jobs cross py4j: the cost follows the query, not the retained
+    history."""
+    out = []
+    for j in _jobs_newest_first(after.sc):
+        jid = j.jobId()
+        if jid <= before.last_job:
+            break
+        if jid > after.last_job:
             continue
-        for k, v in m.items():
-            out[k] += v
+        start = j.submissionTime().get().getTime()
+        end = j.completionTime()
+        desc = j.description()
+        sids = j.stageIds()
+        out.append({
+            "job": jid,
+            "start_ms": start,
+            "end_ms": end.get().getTime() if end.isDefined() else start,
+            "stages": [sids.apply(i) for i in range(sids.size())],
+            "tasks": j.numTasks(),
+            "desc": desc.get() if desc.isDefined() else j.name(),
+        })
+    return out[::-1]
+
+
+def delta(before: Snapshot, after: Snapshot) -> dict[str, int]:
+    """Shuffle bytes written/read and memory/disk spill summed over the
+    last attempt of every stage of ``jobs(before, after)``. Each job gets
+    its own stage ids (a reused shuffle shows up as a new, skipped stage
+    with zero bytes), so queries run one after another never share a
+    stage."""
+    out = dict.fromkeys(_FIELDS.values(), 0)
+    store = after.sc._jsc.sc().statusStore()
+    for sid in sorted({s for j in jobs(before, after) for s in j["stages"]}):
+        stage = store.lastStageAttempt(sid)
+        for getter, key in _FIELDS.items():
+            out[key] += getattr(stage, getter)()
     return out
 
 

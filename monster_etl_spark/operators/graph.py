@@ -19,6 +19,9 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from monster_etl_spark.localrel import local_df, spark_round
 
 
 def _ensure_checkpoint_dir(df: DataFrame, checkpoint_dir: str | None) -> None:
@@ -73,7 +76,9 @@ def connected_components(
     union-find — one job instead of O(diameter) iterative joins. Larger
     graphs use distributed min-label propagation. Both paths produce the
     identical min-label result (cross-checked in tests); set
-    ``driver_threshold=0`` to force the distributed path.
+    ``driver_threshold=0`` to force the distributed path. A graph with a
+    NULL endpoint also takes the distributed path, whose result keeps one
+    ``(NULL, NULL)`` row.
 
     Raises if the distributed fixpoint is not reached within ``max_iter``
     rounds (a diameter larger than max_iter — raise the bound for
@@ -84,14 +89,12 @@ def connected_components(
     default executor-local ``localCheckpoint`` — required for runs long
     enough that executor loss is expected (see ``_truncate_lineage``).
     """
-    # single materialization probe: take(threshold+1) both decides the path
-    # and, on the fast path, already holds every edge (a separate count()
-    # would compute the expensive pair subtree twice)
-    edge_rows = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).take(
-        driver_threshold + 1
-    )
-    if len(edge_rows) <= driver_threshold:
-        spark = pairs.sparkSession
+    # single materialization probe: the bounded Arrow collect both decides
+    # the path and, on the fast path, already holds every edge (a separate
+    # count() would compute the expensive pair subtree twice); a NULL
+    # endpoint falls through to the distributed loop, like PageRank's
+    got = _collect_edges(pairs, src, dst, driver_threshold)
+    if got is not None:
         parent: dict = {}
 
         def find(x):
@@ -101,24 +104,15 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for r in edge_rows:
-            ra, rb = find(r["a"]), find(r["b"])
+        for a, b in zip(*got):
+            ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         comp: dict = {}
         for n in list(parent):
             comp.setdefault(find(n), []).append(n)
         rows = [(n, min(members)) for members in comp.values() for n in members]
-        # node type = union-coerced type of BOTH id columns, matching the
-        # distributed path (src-only typing would silently narrow dst ids)
-        node_schema = (
-            pairs.select(F.col(src).alias("node"))
-            .unionByName(pairs.select(F.col(dst).alias("node")))
-            .schema
-        )
-        node_type = node_schema["node"].dataType
-        from pyspark.sql import types as T
-
+        node_type = _node_type(pairs, src, dst)
         schema = T.StructType(
             [T.StructField("node", node_type), T.StructField("component", node_type)]
         )
@@ -126,9 +120,7 @@ def connected_components(
         # pickled-RDD-backed and re-runs a 32-task Python-worker wave on
         # EVERY downstream broadcast build of the component table
         # (measured ~0.5 s/eval inside q_corpus_curation — round-11)
-        from monster_etl_spark.localrel import local_df
-
-        return local_df(spark, rows, schema)
+        return local_df(pairs.sparkSession, rows, schema)
 
     _ensure_checkpoint_dir(pairs, checkpoint_dir)
     edges = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -250,6 +242,18 @@ PAGERANK_DRIVER_EDGE_CAP = int(
 )
 
 
+def _node_type(edges: DataFrame, src: str, dst: str):
+    """Node type of a driver-tier result: the union-coerced type of BOTH
+    endpoint columns, exactly as the distributed paths' union(...).distinct()
+    resolves it (src-only typing would silently narrow dst ids)."""
+    return (
+        edges.select(F.col(src).alias("node"))
+        .unionByName(edges.select(F.col(dst).alias("node")))
+        .schema["node"]
+        .dataType
+    )
+
+
 def _collect_edges(edges: DataFrame, src: str, dst: str, cap: int):
     """One-job bounded Arrow collect of (src, dst): ``(s_list, d_list)``
     or ``None`` when over ``cap`` or any endpoint is null (the
@@ -286,21 +290,9 @@ def _pagerank_driver(
     overflow for the documented ``base``."""
     import numpy as np
 
-    from monster_etl_spark.localrel import local_df, spark_round
-
-    # node type = union-coerced type of BOTH endpoint columns, exactly as
-    # the distributed path's union(...).distinct() resolves it
-    node_type = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .schema["node"]
-        .dataType
-    )
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
-            T.StructField("node", node_type),
+            T.StructField("node", _node_type(edges, src, dst)),
             T.StructField("rank_fp", T.LongType()),
             T.StructField("rank", T.DoubleType()),
         ]

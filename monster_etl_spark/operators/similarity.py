@@ -303,7 +303,7 @@ KMEANS_DRIVER_FIT_CAP = int(os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_FIT_CAP", 
 # rescue it), while knn_pq's 8-wide subspace aggregate wins 2.88 vs 3.17.
 # So: narrow fixed-dim corpora (PQ subspaces, low-d vectors) take the
 # one-exchange wide path; everything else keeps the explode path.
-KMEANS_WIDE_DIM_CAP = int(os.environ.get("SPARK_GRAFT_KMEANS_WIDE_DIM_CAP", "16"))
+KMEANS_WIDE_DIM_CAP = 16
 
 #: cell count below which two-level assignment cannot win: per-row cost is
 #: ~(1 + sup_probes) * sqrt(cells) dots vs ``cells`` flat, so the crossover

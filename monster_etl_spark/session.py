@@ -74,13 +74,12 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # AQE, its partition coalescing and its skew-join splitting are on
+        # by default in Spark 4 (tests/test_session.py pins them)
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(initial_partitions),
         )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE coalesce shuffles UNDER persist()/cache too (off by
         # default): without it a cached subtree materializes at the full
         # initialPartitionNum — bpe_learn_merges' vocabulary cache came

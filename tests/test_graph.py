@@ -66,6 +66,21 @@ def test_random_graph_matches_union_find(spark):
     _check(spark, edges)
 
 
+def test_null_endpoint_same_rows_on_both_tiers(spark):
+    """A NULL endpoint sends the default call to the distributed loop
+    (the driver union-find cannot order NULL against ids), so both calls
+    give the components plus the one ``(NULL, NULL)`` row."""
+    pairs = spark.createDataFrame([(1, 2), (2, None), (3, 4)], "doc_a bigint, doc_b bigint")
+    want = [(None, None), (1, 1), (2, 1), (3, 3), (4, 3)]
+
+    def rows(**kw):
+        got = connected_components(pairs, **kw).collect()
+        return sorted((tuple(r) for r in got), key=lambda t: (t[0] is not None, t))
+
+    assert rows() == want
+    assert rows(driver_threshold=0) == want
+
+
 def test_dedup_survivors(spark):
     df = spark.createDataFrame([(i, f"d{i}") for i in range(6)], "doc_id bigint, text string")
     pairs = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "doc_a bigint, doc_b bigint")

@@ -1,38 +1,116 @@
-"""Shuffle/spill accounting (monster_etl_spark.metrics): the delta logic
-must be immune to UI retained-stage eviction, and the no-UI path must
-degrade to None (the engine's default session keeps the UI off)."""
+"""Per-query accounting (monster_etl_spark.metrics) from the in-process
+status store: it measures in the engine's default UI-off session, the
+delta covers only the jobs of the measured query however much history
+the session holds, and no engine code or tool goes back to the UI's REST
+port. ``tools/profile_query.py`` is smoke-tested on top of it."""
+
+import json
+import os
+import re
+import subprocess
+import sys
 
 from monster_etl_spark import metrics
 
-
-def _m(sw=0, sr=0, ms=0, ds=0):
-    return {"shuffle_write": sw, "shuffle_read": sr, "mem_spill": ms, "disk_spill": ds}
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_delta_sums_only_new_stage_attempts():
-    before = {"1.0": _m(sw=100, sr=100), "2.0": _m(sw=50)}
-    after = {**before, "3.0": _m(sw=7, sr=9, ds=3), "3.1": _m(sw=1)}
-    assert metrics.delta(before, after) == _m(sw=8, sr=9, ds=3)
+def _measure(spark, action):
+    before = metrics.snapshot(spark)
+    action()
+    after = metrics.snapshot(spark)
+    return before, after
 
 
-def test_delta_immune_to_eviction():
-    """The UI retains a bounded stage list: stages from BEFORE can vanish
-    from AFTER. A cumulative-total diff would go negative (observed on a
-    real bench run); the keyed diff must not."""
-    before = {f"{i}.0": _m(sw=1000) for i in range(10)}
-    after = {"9.0": _m(sw=1000), "10.0": _m(sw=42, ms=5)}  # 0..8 evicted
-    assert metrics.delta(before, after) == _m(sw=42, ms=5)
+def test_repartition_shows_shuffle_bytes_with_ui_off(spark):
+    # the shared test session runs with the engine default, UI off
+    assert spark.sparkContext.getConf().get("spark.ui.enabled") == "false"
+    before, after = _measure(spark, lambda: spark.range(0, 5000, 1, 4).repartition(3).count())
+    d = metrics.delta(before, after)
+    assert d["shuffle_write"] > 0 and d["shuffle_read"] > 0
+    assert d["mem_spill"] == d["disk_spill"] == 0
 
 
-def test_delta_none_propagates():
-    assert metrics.delta(None, {"1.0": _m()}) is None
-    assert metrics.delta({"1.0": _m()}, None) is None
+def test_delta_sums_only_new_stage_attempts(spark):
+    """The same query measured alone and again after a dozen earlier
+    queries in the session gives the same bytes: the delta sums the
+    stages of the jobs newer than the snapshot, never older ones."""
+
+    def query():
+        spark.range(0, 2000, 1, 2).repartition(2).count()
+
+    first = _measure(spark, query)
+    alone = metrics.delta(*first)
+    for i in range(12):
+        spark.range(0, 20_000 + i, 1, 4).repartition(5).count()
+    history_end = metrics.snapshot(spark)
+    before, after = _measure(spark, query)
+    assert alone["shuffle_write"] > 0
+    assert metrics.delta(before, after) == alone
+    # the span that holds the dozen queries counts far more
+    assert metrics.delta(first[0], after)["shuffle_write"] > 10 * alone["shuffle_write"]
+    earlier = {s for j in metrics.jobs(first[0], history_end) for s in j["stages"]}
+    measured = metrics.jobs(before, after)
+    assert measured and all(j["job"] > before.last_job for j in measured)
+    assert min(s for j in measured for s in j["stages"]) > max(earlier)
 
 
-def test_snapshot_none_when_ui_disabled(spark):
-    # the shared test session runs with spark.ui.enabled=false
-    assert spark.sparkContext.uiWebUrl is None
-    assert metrics.snapshot(spark) is None
+def test_jobs_lists_grouped_jobs_in_order(spark):
+    """Jobs run under a job group are listed too (the status tracker's
+    ungrouped id list misses them), oldest first, with epoch-ms times."""
+    sc = spark.sparkContext
+
+    def grouped():
+        sc.setJobGroup("metrics-test", "grouped count")
+        try:
+            spark.range(0, 100, 1, 2).repartition(2).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        spark.range(0, 100, 1, 2).count()
+
+    rows = metrics.jobs(*_measure(spark, grouped))
+    ids = [j["job"] for j in rows]
+    assert ids == sorted(ids) and len(ids) >= 2
+    assert rows[0]["desc"] == "grouped count"
+    assert all(0 < j["start_ms"] <= j["end_ms"] and j["tasks"] > 0 for j in rows)
+
+
+def test_no_ui_or_rest_reader():
+    """Nothing turns the UI back on or reads its REST port: engine code,
+    tools and the bench read the status store in-process."""
+    pattern = re.compile(r"spark\.ui\.enabled['\"]?\s*[:,=]\s*['\"]?true|uiWebUrl|/api/v1")
+    paths = [os.path.join(REPO, "bench.py")]
+    for top in ("monster_etl_spark", "tools"):
+        for root, _, files in os.walk(os.path.join(REPO, top)):
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    offenders = []
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            for i, line in enumerate(f, 1):
+                if pattern.search(line):
+                    offenders.append(f"{os.path.relpath(path, REPO)}:{i}")
+    assert not offenders, offenders
+
+
+def test_profile_query_smoke(tmp_path, sf_dir):
+    """Two queries at sf0.001 in a UI-off session: a build time for each,
+    job rows, and a non-negative driver gap."""
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "profile_query.py"),
+         "q1_pricing_summary", "q3_shipping_priority", "--sf-dir", sf_dir, "--runs", "1"],
+        capture_output=True, cwd=tmp_path, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    recs = [json.loads(line) for line in proc.stdout.decode().splitlines() if line.startswith("{")]
+    builds = {r["query"]: r["build_s"] for r in recs if "build_s" in r}
+    assert set(builds) == {"q1_pricing_summary", "q3_shipping_priority"}
+    assert all(b >= 0 for b in builds.values())
+    assert any("job" in r for r in recs)
+    timed = [r for r in recs if r.get("run") == "timed"]
+    assert len(timed) == 2
+    assert all(r["jobs"] >= 1 and r["gap_sec"] >= 0 for r in timed)
 
 
 def test_fmt_bytes():

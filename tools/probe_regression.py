@@ -36,7 +36,7 @@ def child(sf_dir: str, runs: int) -> None:
     from monster_etl_spark.queries import all_queries
 
     registry = all_queries()
-    spark = get_spark(app_name="probe-regression", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="probe-regression")
     init_p = spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     # warm-up: JVM + codegen + parquet footers (same shape as bench.py)
     registry["t3_extract_fields"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

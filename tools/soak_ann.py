@@ -58,7 +58,7 @@ def main() -> None:
     from monster_etl_spark import metrics as M
     from monster_etl_spark.operators import similarity as sim
 
-    spark = get_spark(app_name="soak-ann", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="soak-ann")
     spark.sparkContext.setLogLevel("ERROR")
 
     def topk_sets(df):
@@ -133,9 +133,8 @@ def main() -> None:
             print(json.dumps({
                 "sf_dir": sf_dir, "variant": name, "wall_s": round(best, 1),
                 "recall": round(best_rec, 3),
-                "spill": {k: best_m[k] for k in ("mem_spill", "disk_spill")}
-                if best_m else None,
-                "shuffle_write": best_m["shuffle_write"] if best_m else None,
+                "spill": {k: best_m[k] for k in ("mem_spill", "disk_spill")},
+                "shuffle_write": best_m["shuffle_write"],
             }), flush=True)
 
     # decade fit over every CONSECUTIVE pair with a real row-count ratio

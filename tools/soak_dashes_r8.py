@@ -6,7 +6,7 @@ sys.path.insert(0, "/root/repo")
 from monster_etl_spark import get_spark
 from monster_etl_spark.queries import all_queries
 import bench
-spark = get_spark(app_name="sf10-dashes", extra_conf={"spark.ui.enabled": "false"})
+spark = get_spark(app_name="sf10-dashes")
 bench._warm_python_workers(spark)
 reg = all_queries()
 sf = "/root/repo/.scaledata/sf10"

@@ -90,7 +90,7 @@ def main() -> None:
                      ".scaledata", "sf1"),
     ]
     registry = all_queries()
-    spark = get_spark(app_name="media-soak", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="media-soak")
     cores = spark.sparkContext.defaultParallelism
     registry["t3_extract_fields"].fn(spark, dirs[0]).write.format("noop").mode(
         "overwrite"

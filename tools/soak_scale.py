@@ -109,9 +109,7 @@ def main() -> None:
     from monster_etl_spark.queries import all_queries
     from monster_etl_spark.session import get_spark
 
-    # UI on: the /api/v1 status endpoint is where per-query shuffle/spill
-    # deltas come from (metrics.py) — "disk-bound" claims become data
-    spark = get_spark(extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     reg = all_queries()
     names = args.queries or bench.SOAK_QUERIES
@@ -131,9 +129,7 @@ def main() -> None:
             elapsed = time.perf_counter() - t0
             if elapsed < best:
                 best = elapsed
-                d = metrics.delta(before, metrics.snapshot(spark))
-                if d is not None:
-                    qmetrics[name] = d
+                qmetrics[name] = metrics.delta(before, metrics.snapshot(spark))
         out[name] = round(best, 2)
         if args.parity:
             spec = reg[name]
@@ -151,16 +147,12 @@ def main() -> None:
                 )
             else:
                 parity[name] = {"match": None, "note": "no oracle (rows-only query)"}
-        m = qmetrics.get(name)
-        mtxt = (
-            "  sw={} sr={} spill(mem={} disk={})".format(
-                metrics.fmt_bytes(m["shuffle_write"]),
-                metrics.fmt_bytes(m["shuffle_read"]),
-                metrics.fmt_bytes(m["mem_spill"]),
-                metrics.fmt_bytes(m["disk_spill"]),
-            )
-            if m
-            else ""
+        m = qmetrics[name]
+        mtxt = "  sw={} sr={} spill(mem={} disk={})".format(
+            metrics.fmt_bytes(m["shuffle_write"]),
+            metrics.fmt_bytes(m["shuffle_read"]),
+            metrics.fmt_bytes(m["mem_spill"]),
+            metrics.fmt_bytes(m["disk_spill"]),
         )
         print(f"{name} {out[name]}{mtxt}", flush=True)
     print(
