@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
+from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
@@ -82,16 +83,32 @@ def jobs(before: Snapshot, after: Snapshot) -> list[dict]:
     return out[::-1]
 
 
+def _last_attempt(store, sid: int):
+    """The stage's last attempt, or None once the store has evicted it.
+    The store keeps ``spark.ui.retainedStages`` stages (default 1000) and
+    evicts the oldest by completion time asynchronously; a skipped stage
+    has none, so it goes first, even one of the query just run."""
+    try:
+        return store.lastStageAttempt(sid)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.util.NoSuchElementException":
+            raise
+        return None
+
+
 def delta(before: Snapshot, after: Snapshot) -> dict[str, int]:
     """Shuffle bytes written/read and memory/disk spill summed over the
     last attempt of every stage of ``jobs(before, after)``. Each job gets
     its own stage ids (a reused shuffle shows up as a new, skipped stage
     with zero bytes), so queries run one after another never share a
-    stage."""
+    stage. An evicted stage counts zero: exact for a skipped stage, short
+    only for a query with more stages than the store retains."""
     out = dict.fromkeys(_FIELDS.values(), 0)
     store = after.sc._jsc.sc().statusStore()
     for sid in sorted({s for j in jobs(before, after) for s in j["stages"]}):
-        stage = store.lastStageAttempt(sid)
+        stage = _last_attempt(store, sid)
+        if stage is None:
+            continue
         for getter, key in _FIELDS.items():
             out[key] += getattr(stage, getter)()
     return out

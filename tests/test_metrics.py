@@ -1,8 +1,8 @@
 """Per-query accounting (monster_etl_spark.metrics) from the in-process
 status store: it measures in the engine's default UI-off session, the
 delta covers only the jobs of the measured query however much history
-the session holds, and no engine code or tool goes back to the UI's REST
-port. ``tools/profile_query.py`` is smoke-tested on top of it."""
+the session holds, stages the store has evicted do not break it, and no
+engine code or tool goes back to the UI's REST port. ``tools/profile_query.py`` is smoke-tested on top of it."""
 
 import json
 import os
@@ -53,6 +53,47 @@ def test_delta_sums_only_new_stage_attempts(spark):
     measured = metrics.jobs(before, after)
     assert measured and all(j["job"] > before.last_job for j in measured)
     assert min(s for j in measured for s in j["stages"]) > max(earlier)
+
+
+# Run in its own session: the store's retention is fixed when the context
+# starts. Skipped stages have no completion time, so the store evicts them
+# first, often before the delta of their own query is read.
+_EVICTION_SCRIPT = """
+import json
+from monster_etl_spark import metrics
+from monster_etl_spark.session import get_spark
+spark = get_spark(app_name="metrics-eviction", master="local[2]", shuffle_partitions=2,
+                  extra_conf={"spark.ui.retainedStages": "12", "spark.ui.retainedJobs": "12"})
+deltas, first_stages = [], None
+for _ in range(20):
+    before = metrics.snapshot(spark)
+    spark.range(0, 2000, 1, 2).repartition(2).count()
+    after = metrics.snapshot(spark)
+    if first_stages is None:
+        first_stages = [s for j in metrics.jobs(before, after) for s in j["stages"]]
+    deltas.append(metrics.delta(before, after))
+store = spark.sparkContext._jsc.sc().statusStore()
+evicted = [s for s in first_stages if metrics._last_attempt(store, s) is None]
+print(json.dumps({"deltas": deltas, "first_stages": first_stages, "evicted": evicted}))
+spark.stop()
+"""
+
+
+def test_delta_immune_to_eviction(tmp_path):
+    """The store retains a bounded stage list and evicts stages, even the
+    measured query's own skipped ones, while queries run; the delta of
+    the same query stays the same through twenty runs of it in a session
+    that keeps only a dozen stages."""
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", PYTHONPATH=REPO)
+    proc = subprocess.run([sys.executable, "-c", _EVICTION_SCRIPT],
+                          capture_output=True, cwd=tmp_path, env=env, timeout=600)
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    out = json.loads(proc.stdout.decode().splitlines()[-1])
+    # eviction really happened: the first query's stages are all gone
+    assert out["first_stages"] and out["evicted"] == out["first_stages"]
+    first = out["deltas"][0]
+    assert first["shuffle_write"] > 0 and first["shuffle_read"] > 0
+    assert all(d == first for d in out["deltas"])
 
 
 def test_jobs_lists_grouped_jobs_in_order(spark):
