@@ -4,11 +4,16 @@
 facts that decide whether a plan scales — shuffle count, broadcast count,
 scan pushdowns, Python crossings, codegen spans — so perf reviews and the
 plan-shape tests read plan *facts* instead of grepping plan text ad hoc.
+
+``plan_hash(df)`` digests the physical plan's shape with the session-varying
+parts stripped by ``normalize_plan``: the guard that a refactor leaves every
+query's plan as it was, and the plan fact ``bench.py`` records per query.
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import io
 import re
 from dataclasses import dataclass, field
@@ -145,3 +150,105 @@ def unpartitioned_windows(df: DataFrame) -> list[str]:
 
     walk(df._jdf.queryExecution().sparkPlan())
     return out
+
+
+def normalize_plan(s: str) -> str:
+    """Strip the session-varying parts of a physical-plan string so the
+    hash is stable within and across sessions for the same plan SHAPE:
+    exprIds, plan ids, object addresses, codegen stage ids, and the
+    per-process counters in lambda-variable names (PySpark names a
+    Column-API lambda ``x_13``) and in ``_common_expr_<n>`` aliases.
+
+    A scan metadata value longer than ``spark.sql.maxMetadataStringLength``
+    is cut and ends in ``...``; when it holds a lambda variable, the cut
+    point moves with the counters' digit count, so such a value keeps
+    only its text before the first lambda variable."""
+    s = re.sub(r"(: [^:\n]*?)lambda [^:\n]*?\.\.\.(?=, \w+: |$)", r"\1...", s, flags=re.M)
+    s = re.sub(r"(lambda \w+?)_\d+#", r"\1#", s)
+    s = re.sub(r"_common_expr_\d+", "_common_expr_x", s)
+    s = re.sub(r"#\d+L?", "#x", s)
+    s = re.sub(r"plan_id=\d+", "plan_id=x", s)
+    s = re.sub(r"\bid=#?\d+", "id=x", s)
+    s = re.sub(r"0x[0-9a-fA-F]+", "0xX", s)
+    s = re.sub(r"\[codegen id : \d+\]", "[codegen id : x]", s)
+    return _canonical_distinct_groups(s)
+
+
+def _split_top(s: str) -> list[str]:
+    """Items of a plan list: ``s`` split at commas outside any brackets."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        depth += (ch in "([") - (ch in ")]")
+        if ch == "," and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+    return out + [s[start:].strip()]
+
+
+def _canonical_distinct_groups(s: str) -> str:
+    """Renumber the distinct-aggregate groups of a normalized plan in name
+    order.
+
+    ``RewriteDistinctAggregates`` orders its distinct groups (the Expand
+    projections and their ``gid``) by exprId hashes, so one query built
+    after a different history plans them in another order. The Expand's
+    output names the group columns before ``gid#x``; every list that
+    carries them before ``gid#x`` (keys, sort orders, partitioning, the
+    projections) gets them in sorted order, and each ``gid`` literal the
+    number its group has in that order."""
+    m = re.search(r"Expand \[\[.*\]\], \[(.*)\]$", s, flags=re.M)
+    if not m or "gid#x" not in (out := _split_top(m.group(1))):
+        return s
+    n = out.index("gid#x")
+    cols = out[:n]
+    order = sorted(range(n), key=cols.__getitem__)
+    sets = {}  # gid literal -> the group columns its projection sets
+    for proj in re.findall(r"\[([^\[\]]*)\]", m.group(0)):
+        items = _split_top(proj)
+        if len(items) > n and items[n].isdigit():
+            sets[items[n]] = sorted(c for c, v in zip(cols, items) if v != "null")
+    gid = dict(zip(sorted(sets, key=sets.__getitem__), sorted(sets, key=int)))
+
+    def fix(items: list[str]) -> list[str]:
+        for k in range(n, len(items)):
+            if items[k].split(" ")[0] == "gid#x" or (
+                k == n and items[k] in gid and all(v in ("null", c) for v, c in zip(items, cols))
+            ):
+                items = items[: k - n] + [items[k - n + i] for i in order] + items[k:]
+                items[k] = gid.get(items[k], items[k])
+                return items
+        lits = [_split_top(i[1:-1])[n:n + 1] if i[:1] == "[" else [] for i in items]
+        if all(lit and lit[0] in gid for lit in lits):  # the Expand's projections
+            return [i for _, i in sorted(zip((int(lit[0]) for lit in lits), items))]
+        return items
+
+    def rewrite(line: str) -> str:
+        stack: list[list[str]] = [[]]
+        for ch in line:
+            if ch in "([":
+                stack.append([ch])
+            elif ch in ")]" and len(stack) > 1:
+                opener, *inner = stack.pop()
+                items = _split_top("".join(inner))
+                fixed = fix(items)
+                stack[-1].append(opener + ("".join(inner) if fixed == items else ", ".join(fixed)) + ch)
+            else:
+                stack[-1].append(ch)
+        if len(stack) > 1:
+            return line
+        return re.sub(r"\(gid#x = (\d+)\)", lambda g: f"(gid#x = {gid.get(g[1], g[1])})", "".join(stack[0]))
+
+    return "\n".join(rewrite(x) if "gid#x" in x else x for x in s.split("\n"))
+
+
+def plan_hash(df) -> str | None:
+    """Digest of the query's physical plan shape: the first 12 hex digits
+    of the SHA-256 of its normalized ``executedPlan`` string, or None when
+    the plan cannot be built. Equal digests mean the same plan shape, so
+    a refactor is plan-neutral when every query's digest holds. Planning
+    only — nothing executes."""
+    try:
+        s = df._jdf.queryExecution().executedPlan().toString()
+    except Exception:
+        return None
+    return hashlib.sha256(normalize_plan(s).encode()).hexdigest()[:12]

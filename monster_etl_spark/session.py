@@ -67,8 +67,7 @@ def get_spark(
     # size, so small SFs land on a handful of tasks while a 21 GB shuffle
     # keeps ~hundreds of ~64 MB partitions — the 128-256 MB/partition rule
     # applied automatically instead of via an env knob.
-    env_init = os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    initial_partitions = int(env_init) if env_init else max(1024, shuffle_partitions)
+    initial_partitions = max(1024, shuffle_partitions)
 
     builder = (
         SparkSession.builder.master(master)

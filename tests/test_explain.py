@@ -1,6 +1,7 @@
-"""plan_summary must report the facts the plan tests rely on."""
+"""plan_summary must report the facts the plan tests rely on, and
+plan_hash must tell plan shapes apart while ignoring session noise."""
 
-from monster_etl_spark.explain import plan_summary
+from monster_etl_spark.explain import normalize_plan, plan_hash, plan_summary
 from monster_etl_spark.queries import all_queries
 
 Q = all_queries()
@@ -191,3 +192,121 @@ def test_unpartitioned_windows_only_on_bounded_inputs(spark, sf_dir):
         if n > allowed.get(name, 0):
             bad[name] = n
     assert bad == {}, f"unpartitioned windows beyond the bounded whitelist: {bad}"
+
+
+def test_normalize_plan_strips_session_noise():
+    a = normalize_plan(
+        "Exchange hashpartitioning(k#123L, 32) [plan_id=45] "
+        "[codegen id : 3] <lambda at 0xdeadbeef> [id=#77] "
+        "transform(v#1, lambdafunction((lambda x_13#5 - m#2), lambda x_13#5, false)) "
+        "_common_expr_4#8\n"
+        "+- FileScan parquet [embedding#1] Batched: true, DataFilters: [isnotnull("
+        "transform(embedding#1, lambdafunction(cast(lambda x_7#3 as double), "
+        "lambda x_7#3, fa..., Format: Parquet"
+    )
+    b = normalize_plan(
+        "Exchange hashpartitioning(k#9L, 32) [plan_id=2] "
+        "[codegen id : 1] <lambda at 0xcafe1234> [id=#3] "
+        "transform(v#8, lambdafunction((lambda x_2140#9 - m#2), lambda x_2140#9, false)) "
+        "_common_expr_17#8\n"
+        "+- FileScan parquet [embedding#6] Batched: true, DataFilters: [isnotnull("
+        "transform(embedding#6, lambdafunction(cast(lambda x_1302#4 as double), "
+        "lambda x_1302#4, f..., Format: Parquet"
+    )
+    assert a == b
+    # a parsed-SQL lambda has no counter and matches the Column-API form
+    assert normalize_plan("lambda x#5") == normalize_plan("lambda x_13#5")
+    # what the normalizer keeps still tells plans apart
+    assert normalize_plan("lambda acc#1") != normalize_plan("lambda x_1#1")
+    assert a != normalize_plan(a.replace("Parquet", "Orc"))
+
+
+_DISTINCT_PLAN = """\
+HashAggregate(keys=[f#8], functions=[count(ok#0L) FILTER (WHERE (gid#20 = {ok})), \
+count(pk#1L) FILTER (WHERE (gid#20 = {pk}))], output=[f#8, count#30L, count#31L])
++- Exchange hashpartitioning({cols}, 4), ENSURE_REQUIREMENTS, [plan_id=3]
+   +- Expand [{projections}], [{cols}]"""
+
+
+def _distinct_plan(first, ok_gid=None):
+    """A two-group RewriteDistinctAggregates plan with group ``first``
+    numbered 1."""
+    attrs = {"ok": "ok#21L", "pk": "pk#22L"}
+    second = "pk" if first == "ok" else "ok"
+    cols = f"{attrs[first]}, {attrs[second]}, f#8, gid#20"
+    projections = f"[{attrs[first]}, null, f#8, 1], [null, {attrs[second]}, f#8, 2]"
+    gids = {first: 1, second: 2}
+    if ok_gid:
+        gids["ok"] = ok_gid
+    return _DISTINCT_PLAN.format(cols=cols, projections=projections, **gids)
+
+
+def test_normalize_plan_orders_distinct_groups():
+    """The same distinct-aggregate plan with its groups numbered in either
+    order (it follows exprId hashes) normalizes to one string; counting a
+    column under the other group's gid stays a different plan."""
+    a, b = (normalize_plan(_distinct_plan(f)) for f in ("ok", "pk"))
+    assert a == b
+    assert "Expand [[f#x, ok#x, null, 1], [f#x, null, pk#x, 2]], [f#x, ok#x, pk#x, gid#x]" in a
+    assert "hashpartitioning(f#x, ok#x, pk#x, gid#x, 4)" in a
+    assert normalize_plan(_distinct_plan("ok", ok_gid=2)) != a
+
+
+def test_distinct_aggregate_plan_hashes_independent_of_session_history(spark, sf_dir):
+    """``q_approx_distinct`` and ``q_profile`` hash the same whatever the
+    session built before them."""
+    from monster_etl_spark.queries import all_queries
+
+    registry = all_queries()
+    prefix = sorted(registry)[:7]
+    hashes = {"q_approx_distinct": set(), "q_profile": set()}
+    for k in (0, 3, 7):
+        for name in prefix[:k]:
+            registry[name].fn(spark, sf_dir)
+        for name, seen in hashes.items():
+            seen.add(plan_hash(registry[name].fn(spark, sf_dir)))
+    assert all(len(seen) == 1 and None not in seen for seen in hashes.values()), hashes
+
+
+def test_plan_hash_stable_within_session(spark):
+    import pyspark.sql.functions as F
+
+    def mk():
+        return (
+            spark.range(100)
+            .select((F.col("id") % 7).alias("k"))
+            .groupBy("k").count()
+        )
+    h1, h2 = plan_hash(mk()), plan_hash(mk())
+    assert h1 is not None and h1 == h2
+    other = plan_hash(spark.range(100).select("id"))
+    assert other != h1
+
+    def with_lambdas():
+        # each build draws fresh lambda-variable counters
+        arr = F.array(F.col("id").cast("double"), F.lit(1.0))
+        return spark.range(10).select(
+            F.aggregate(F.transform(arr, lambda x: x * 2), F.lit(0.0), lambda a, x: a + x)
+            .alias("s")
+        )
+    h3, h4 = plan_hash(with_lambdas()), plan_hash(with_lambdas())
+    assert h3 is not None and h3 == h4
+
+
+def test_similarity_query_plan_hashes_stable_within_session(spark, sf_dir):
+    """Each registry query on the similarity path (the similarity module's
+    registry plus ``q_activity_similarity``), built twice in one session,
+    has one plan hash: the guard that a refactor of the similarity layer
+    is plan-neutral can only be read off a hash that does not drift."""
+    from monster_etl_spark.queries import all_queries
+    from monster_etl_spark.queries.similarity_queries import QUERIES
+
+    names = sorted(QUERIES) + ["q_activity_similarity"]
+    assert len(names) == 23
+    registry = all_queries()
+    drift = {}
+    for name in names:
+        h1, h2 = (plan_hash(registry[name].fn(spark, sf_dir)) for _ in range(2))
+        if h1 is None or h1 != h2:
+            drift[name] = (h1, h2)
+    assert not drift, drift

@@ -311,12 +311,12 @@ def test_transform_table_matches_stage_chain(spark_global, table):
 def test_p2_transform_chain_plan_unchanged(spark, sf_dir, monkeypatch):
     """``p2_transform_chain`` plans exactly as it did over the
     stage-by-stage chain."""
-    import bench
+    from monster_etl_spark.explain import plan_hash
     from monster_etl_spark.queries import refops_queries
 
-    got = bench._plan_hash(refops_queries.p2_transform_chain(spark, sf_dir))
+    got = plan_hash(refops_queries.p2_transform_chain(spark, sf_dir))
     monkeypatch.setattr(
         refops_queries, "transform_table", lambda df, config: _stage_chain(df, config, True)
     )
-    want = bench._plan_hash(refops_queries.p2_transform_chain(spark, sf_dir))
+    want = plan_hash(refops_queries.p2_transform_chain(spark, sf_dir))
     assert want is not None and got == want

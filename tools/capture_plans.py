@@ -2,7 +2,7 @@
 
 Usage:  python tools/capture_plans.py --out plans/r11 --suffix _before [query ...]
 
-Planning only — nothing executes (same contract as bench's ``_plan_hash``).
+Planning only — nothing executes (same contract as ``explain.plan_hash``).
 With no query args, captures every headline bench query. The files are the
 judge-checkable evidence for plan-shape claims in OPTIMIZATION_r*.md.
 """
