@@ -258,12 +258,23 @@ def _collect_edges(edges: DataFrame, src: str, dst: str, cap: int):
     """One-job bounded Arrow collect of (src, dst): ``(s_list, d_list)``
     or ``None`` when over ``cap`` or any endpoint is null (the
     distributed join semantics handle nulls; the driver tier does not
-    reproduce them)."""
-    tbl = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .limit(cap + 1)
-        .toArrow()
-    )
+    reproduce them).
+
+    Every job of the collect, the ones AQE submits from its own thread
+    included, carries a job description naming this probe and its cap;
+    the caller's description is restored afterwards. (A job group would
+    hide the jobs from readers that list ungrouped jobs only.)"""
+    sc = edges.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"driver-tier edge probe: collect <= {cap} edges")
+    try:
+        tbl = (
+            edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+            .limit(cap + 1)
+            .toArrow()
+        )
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
     if tbl.num_rows > cap:
         return None
     s, d = tbl.column("_s"), tbl.column("_d")

@@ -378,34 +378,53 @@ def frequent_token_pairs(
     min_support: int = 10,
 ) -> DataFrame:
     """Frequent co-occurring token pairs (the Apriori second pass,
-    market-basket over documents): a pair can only be frequent if both
-    members are (the Apriori property), so singleton document
-    frequencies prune first — one combinable aggregate, the survivors
-    joined back (Zipf-bounded, AQE broadcasts) — and only then does the
-    per-document pair self-join run, on the pruned token set. Returns
-    (tok_a, tok_b, support) with tok_a < tok_b, support >= min_support.
+    market-basket over documents). Returns (tok_a, tok_b, support) with
+    tok_a < tok_b and support >= min_support, support counted in
+    documents. Rows sharing a document id are one document; the NULL id
+    is one document for the token counts and yields no pair.
 
-    Scale: the pair join is an equi-join on the document id; per-doc
-    work is (frequent tokens in doc)², which the support prune keeps
-    small — raising ``min_support`` is the knob, exactly as in Apriori.
+    One linear plan that reads the documents once:
+
+    1. ``groupBy(doc)`` builds each document's distinct, non-empty token
+       set, with map-side partial lists. Its exchange is the only shuffle
+       of the documents; both branches below read it (AQE reuses it).
+    2. Token document frequency is a ``groupBy(tok)`` count over those
+       sets: a combinable aggregate, so a stopword present in every
+       document costs one partial count per task, not one hot task.
+    3. A pair can only be frequent if both members are (the Apriori
+       property), so tokens under ``min_support`` are pruned first by a
+       broadcast join. The frequent vocabulary is small (Zipf; at most
+       all (doc, token) pairs / ``min_support``). A broadcast join keeps
+       the sets' partitioning by document, so regrouping the pruned
+       tokens per document adds no shuffle.
+    4. Each pruned set is sorted and its pairs (s[i], s[j]), i < j, are
+       generated in place with ``posexplode`` and ``explode(slice)``: no
+       self-join, no second pass over the documents. The pair counts
+       are a combinable ``groupBy(tok_a, tok_b)``.
+
+    Scale: per-document work is (frequent tokens in doc)², which the
+    support prune keeps small — raising ``min_support`` is the knob,
+    exactly as in Apriori.
     """
-    toks = (
-        df.select(F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("tok"))
-        .filter(F.col("tok") != "")
-        .distinct()
+    words = F.array_distinct(F.array_remove(tokens(F.col(text_col)), ""))
+    sets = df.groupBy(F.col(id_col).alias("doc")).agg(
+        F.array_distinct(F.flatten(F.collect_list(words))).alias("toks")
     )
+    toks = sets.select("doc", F.explode("toks").alias("tok"))
     freq = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("df_"))
         .filter(F.col("df_") >= min_support)
         .select("tok")
     )
-    pruned = toks.join(freq, "tok").repartition(F.col("doc"))
-    a = pruned.select("doc", F.col("tok").alias("tok_a"))
-    b = pruned.select("doc", F.col("tok").alias("tok_b"))
+    s, i = F.col("s"), F.col("i")
     return (
-        a.join(b, "doc")
-        .filter(F.col("tok_a") < F.col("tok_b"))
+        toks.join(F.broadcast(freq), "tok")
+        .groupBy("doc")
+        .agg(F.array_sort(F.collect_list("tok")).alias("s"))
+        # the NULL document's set becomes a NULL array, which yields no row
+        .select("s", F.posexplode(F.when(F.col("doc").isNotNull(), s)).alias("i", "tok_a"))
+        .select("tok_a", F.explode(F.slice(s, i + 2, F.size(s) - i - 1)).alias("tok_b"))
         .groupBy("tok_a", "tok_b")
         .agg(F.count(F.lit(1)).alias("support"))
         .filter(F.col("support") >= min_support)

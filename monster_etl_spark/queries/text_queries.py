@@ -537,9 +537,17 @@ def text_token_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = tx.frequent_token_pairs(
         load(spark, sf_dir, "documents"), min_support=PAIR_MIN_SUPPORT
     )
+    # symmetrize: each pair row emits (a, b) and (b, a). A union of two
+    # copies of `pairs` would put the pair-mining subtree in the plan
+    # twice, and AQE re-optimizes the whole tree after every stage
     edges = pairs.select(
-        F.col("tok_a").alias("src"), F.col("tok_b").alias("dst")
-    ).unionAll(pairs.select(F.col("tok_b").alias("src"), F.col("tok_a").alias("dst")))
+        F.inline(
+            F.array(
+                F.struct(F.col("tok_a").alias("src"), F.col("tok_b").alias("dst")),
+                F.struct(F.col("tok_b").alias("src"), F.col("tok_a").alias("dst")),
+            )
+        )
+    )
     return pagerank_fixed_point(edges, iterations=PAGERANK_ITERS)
 
 

@@ -161,3 +161,27 @@ def test_bfs_hops_chain_cycle_and_bounds(spark):
     # early exit: empty frontier long before max_hops (no error, same result)
     got3 = {r["node"]: r["hop"] for r in bfs_hops(tri, s1, max_hops=50).collect()}
     assert got3 == got2
+
+
+def test_driver_tier_probe_names_its_jobs(spark):
+    """Both driver tiers' bounded edge collect runs under a job
+    description naming the probe and its cap, then restores the
+    caller's description."""
+    from monster_etl_spark import metrics
+    from monster_etl_spark.operators.graph import pagerank_fixed_point
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    pairs = spark.createDataFrame([(1, 2), (3, 4)], "doc_a long, doc_b long")
+    sc.setJobDescription("caller")
+    try:
+        for build in (lambda: pagerank_fixed_point(edges), lambda: connected_components(pairs)):
+            before = metrics.snapshot(spark)
+            build()
+            jobs = metrics.jobs(before, metrics.snapshot(spark))
+            assert jobs
+            assert all(j["desc"].startswith("driver-tier edge probe: collect <= ") for j in jobs)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.getLocalProperty("spark.job.description") is None
