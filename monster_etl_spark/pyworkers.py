@@ -9,11 +9,18 @@ archive's whole central directory. A reused worker holds ~16 of them
 every task re-parses ~27k zip entries: 140-340 ms of CPU per task on a
 busy 4-core box, several times the codec work of a small partition.
 
-The wrapper drops every zipimporter from ``sys.path_importer_cache`` once
-its task's batches are consumed, so the next task in the same worker has
-nothing to re-read. It is a cache drop, not a path change: an import that
-goes through a zip again rebuilds its finder from
-``zipimport._zip_directory_cache`` without touching the archive.
+That re-read now happens only under Spark's stock daemon, which is what
+non-local masters run: a local session's daemon shim
+(``pydaemon/etl_pydaemon.py``) takes the archives off the workers' path
+before PySpark is imported, so its workers hold no zipimporter at all.
+
+For the stock daemon, the wrapper drops every zipimporter from
+``sys.path_importer_cache`` once its task's batches are consumed, so the
+next task in the same worker has nothing to re-read. It is a cache drop,
+not a path change: an import that goes through a zip again rebuilds its
+finder from ``zipimport._zip_directory_cache`` without touching the
+archive. A worker freshly forked from the stock daemon still re-reads the
+archives in its first task.
 """
 
 from __future__ import annotations

@@ -20,15 +20,82 @@ handles skew-join splitting at runtime.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# the worker daemon shim (see its docstring); alone in its directory, so
+# putting that directory on the workers' path exposes nothing else
+_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pydaemon")
+# Spark and PySpark name each Unix socket "<dir>/.<uuid4>.sock", 43 bytes
+# past the directory; sun_path holds 107 bytes and a NUL
+_SOCKET_NAME_BYTES = 43
+_SUN_PATH_BYTES = 107
 
 
 def _default_heap() -> str:
     """Half of physical RAM in whole GiB, at least 1g, capped at 16g."""
     ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     return f"{max(1, min(16, ram // 2 // 2**30))}g"
+
+
+@functools.cache
+def _socket_dir() -> str | None:
+    """A private (0700) directory for this process's Unix sockets, made on
+    first use and removed at exit, or None when no directory short enough
+    for a socket path can be made. ``$TMPDIR`` comes first; a deep one
+    (a benchmark's per-run work directory) falls back to ``/tmp``."""
+    for base in (tempfile.gettempdir(), "/tmp"):
+        try:
+            path = tempfile.mkdtemp(prefix="etl-", dir=base)
+        except OSError:
+            continue
+        if len(os.fsencode(path)) + _SOCKET_NAME_BYTES <= _SUN_PATH_BYTES:
+            atexit.register(shutil.rmtree, path, True)
+            return path
+        os.rmdir(path)
+    return None
+
+
+def _python_worker_conf(master: str) -> dict[str, str]:
+    """How a local session starts and reaches its Python workers; nothing
+    for other masters, whose workers run on hosts that hold neither the
+    shim's directory nor the socket directory."""
+    if not master.startswith("local"):
+        return {}
+    conf = {
+        # Workers import PySpark from the installed package, not from
+        # pyspark.zip (see pydaemon/etl_pydaemon.py). 4-core box, sf0.01,
+        # these two lines alone, 2 sessions a side: a session's first
+        # multimodal_jpeg_pixel_stats 3.37/3.47 -> 2.92/2.93 s, steady
+        # queries unchanged. With all four lines, fresh local[4] session,
+        # first Python query's 4 tasks summed, 3 sessions a side:
+        # python.boot_s 2.24-2.33 -> 0.64-0.77 s; perfbench curation
+        # cold_pass_s 6.65 -> 6.15 s (medians, lower in 10 of 10 pairs).
+        "spark.python.daemon.module": "etl_pydaemon",
+        "spark.executorEnv.PYTHONPATH": _DAEMON_DIR,
+    }
+    sock = _socket_dir()
+    if sock is not None:
+        conf.update({
+            # Python workers and local-data transfers over a Unix socket
+            # instead of loopback TCP, where some tasks stall for one
+            # delayed ACK (~40 ms). multimodal_wav_sample_stats at sf0.01,
+            # socket line alone, median of 15 runs in 2 sessions a side:
+            # 0.145/0.141 -> 0.108/0.102 s. All four lines against none,
+            # the 42 multimodal_*/knn_* queries at sf0.01, 6 sessions a
+            # side: total 11.2-12.0 -> 10.8-11.8 s, lower in every
+            # session; wav, mp3, mp4, ogg, webm -38 to -46 ms each.
+            "spark.python.unix.domain.socket.enabled": "true",
+            # Unix-socket mode skips the TCP auth secret; a 0700
+            # directory keeps other users from connecting instead.
+            "spark.python.unix.domain.socket.dir": sock,
+        })
+    return conf
 
 
 def get_spark(
@@ -41,6 +108,8 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
+    A ``local*`` master also gets the Python-worker lines of
+    :func:`_python_worker_conf`; ``extra_conf`` overrides any line.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     cores = os.cpu_count() or 32 if cpus == "*" else int(cpus)
@@ -148,7 +217,7 @@ def get_spark(
         # overrides.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_heap()))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_python_worker_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
