@@ -18,10 +18,13 @@ Arrow conversion fall back to the plain path unchanged.
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import TYPE_CHECKING, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def spark_round(x: float, scale: int) -> float:
@@ -66,3 +69,23 @@ def local_df(spark: SparkSession, rows: Iterable[tuple], schema) -> DataFrame:
         return spark.createDataFrame(tbl)
     except Exception:
         return spark.createDataFrame(rows, struct)
+
+
+def bounded_collect(df: DataFrame, cap: int, label: str) -> pa.Table | None:
+    """The probe every driver tier decides with: ``df`` as one
+    ``pyarrow.Table`` if it has at most ``cap`` rows, else ``None``
+    (``cap <= 0``: ``None``, no job). One ``limit(cap + 1)`` collect
+    decides and holds the rows, so ``df``'s subtree runs once. Its jobs,
+    AQE's included, are described ``driver-tier <label> probe: collect
+    <= <cap> rows`` (a job group would hide them from ungrouped-job
+    readers); the caller's description is restored even on error."""
+    if cap <= 0:
+        return None
+    sc = df.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"driver-tier {label} probe: collect <= {cap} rows")
+    try:
+        tbl = df.limit(cap + 1).toArrow()
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+    return None if tbl.num_rows > cap else tbl

@@ -66,17 +66,13 @@ def _build_avi_codec():
         stored as bottom-up 24-bit BGR DIB rows (4-byte stride padding)
         in ``00db`` chunks — the ``BI_RGB`` raw-video layout."""
         stride = (3 * width + 3) & ~3
-        try:
+        datas = []
+        if frames:
             import numpy as np
-        except ImportError:  # pragma: no cover - numpy is baked in
-            np = None
-        if np is not None and frames:
+
             # pooled DIB build: flip + gray->BGR expand + stride pad for
-            # ALL frames in four numpy ops (byte-identical to the
-            # per-pixel walk below; asserted in tests/test_avi.py).
-            # Over-length frames are truncated to width*height — the
-            # tolerance the scalar walk always had (it indexes only
-            # y*width+x); np.frombuffer(count=...) restores it.
+            # ALL frames in four numpy ops. Over-length frames are
+            # truncated to width*height (np.frombuffer(count=...)).
             fa = np.stack(
                 [
                     np.frombuffer(bytes(f), np.uint8, count=height * width)
@@ -89,17 +85,6 @@ def _build_avi_codec():
                 flip[..., None], 3, axis=3
             ).reshape(len(frames), height, 3 * width)
             datas = [padded[i].tobytes() for i in range(len(frames))]
-        else:
-            datas = []
-            for f in frames:
-                rows = []
-                for y in range(height - 1, -1, -1):  # bottom-up
-                    row = bytearray()
-                    for x in range(width):
-                        v = f[y * width + x]
-                        row += bytes((v, v, v))
-                    rows.append(bytes(row).ljust(stride, b"\x00"))
-                datas.append(b"".join(rows))
         movi_items = b""
         idx = b""
         offset = 4

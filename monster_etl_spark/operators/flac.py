@@ -48,10 +48,8 @@ def _build_flac_codec(force_scalar=False):
     import hashlib
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
+    import numpy as _np
+
     np = None if force_scalar else _np
 
     # ---- CRCs (RFC 9639: CRC-8 poly 0x07, CRC-16 poly 0x8005, init 0) ----

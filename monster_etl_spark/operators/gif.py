@@ -55,10 +55,8 @@ from __future__ import annotations
 def _build_gif_codec(force_scalar=False):
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
+    import numpy as _np
+
     np = None if force_scalar else _np
 
     def _pack_lzw_8bit(data):

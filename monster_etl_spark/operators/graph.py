@@ -15,13 +15,17 @@ the DAG does not grow with iterations (the classic iterative-Spark trap).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from monster_etl_spark.localrel import local_df, spark_round
+from monster_etl_spark.localrel import bounded_collect, local_df, spark_round
+
+#: Edge cap of the driver tiers of ``connected_components`` and
+#: ``pagerank_fixed_point``: one collect instead of O(diameter) joins, or
+#: ~2.1 s of PageRank checkpoints and joins at sf0.1 (profile_query.py).
+#: Read at call time; tests set it to 0 to force the distributed loops.
+DRIVER_EDGE_CAP = 1_000_000
 
 
 def _ensure_checkpoint_dir(df: DataFrame, checkpoint_dir: str | None) -> None:
@@ -64,21 +68,20 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    driver_threshold: int = 1_000_000,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``pairs``; the component id is
     the minimum node id in the component (deterministic, engine-agnostic).
 
     Size-adaptive: near-dup pair graphs are tiny relative to the corpus
-    (pairs ~ duplicates, not documents), so when the edge count is under
-    ``driver_threshold`` the components are solved with a driver-side
+    (pairs ~ duplicates, not documents), so when the edge count is at most
+    ``DRIVER_EDGE_CAP`` the components are solved with a driver-side
     union-find — one job instead of O(diameter) iterative joins. Larger
     graphs use distributed min-label propagation. Both paths produce the
-    identical min-label result (cross-checked in tests); set
-    ``driver_threshold=0`` to force the distributed path. A graph with a
-    NULL endpoint also takes the distributed path, whose result keeps one
-    ``(NULL, NULL)`` row.
+    identical min-label result (cross-checked in tests, which set
+    ``DRIVER_EDGE_CAP`` to 0 to force the distributed path). A graph with
+    a NULL endpoint also takes the distributed path, whose result keeps
+    one ``(NULL, NULL)`` row.
 
     Raises if the distributed fixpoint is not reached within ``max_iter``
     rounds (a diameter larger than max_iter — raise the bound for
@@ -89,11 +92,8 @@ def connected_components(
     default executor-local ``localCheckpoint`` — required for runs long
     enough that executor loss is expected (see ``_truncate_lineage``).
     """
-    # single materialization probe: the bounded Arrow collect both decides
-    # the path and, on the fast path, already holds every edge (a separate
-    # count() would compute the expensive pair subtree twice); a NULL
-    # endpoint falls through to the distributed loop, like PageRank's
-    got = _collect_edges(pairs, src, dst, driver_threshold)
+    # a NULL endpoint falls through to the distributed loop, like PageRank's
+    got = _collect_edges(pairs, src, dst)
     if got is not None:
         parent: dict = {}
 
@@ -234,14 +234,6 @@ def bfs_hops(
     return visited
 
 
-#: Edge-count cap for the driver-side PageRank tier — the same
-#: size-adaptive routing (and the same default bound) as
-#: ``connected_components``' union-find fast path. 0 disables.
-PAGERANK_DRIVER_EDGE_CAP = int(
-    os.environ.get("SPARK_GRAFT_PAGERANK_DRIVER_EDGE_CAP", "1000000")
-)
-
-
 def _node_type(edges: DataFrame, src: str, dst: str):
     """Node type of a driver-tier result: the union-coerced type of BOTH
     endpoint columns, exactly as the distributed paths' union(...).distinct()
@@ -254,28 +246,14 @@ def _node_type(edges: DataFrame, src: str, dst: str):
     )
 
 
-def _collect_edges(edges: DataFrame, src: str, dst: str, cap: int):
-    """One-job bounded Arrow collect of (src, dst): ``(s_list, d_list)``
-    or ``None`` when over ``cap`` or any endpoint is null (the
-    distributed join semantics handle nulls; the driver tier does not
-    reproduce them).
-
-    Every job of the collect, the ones AQE submits from its own thread
-    included, carries a job description naming this probe and its cap;
-    the caller's description is restored afterwards. (A job group would
-    hide the jobs from readers that list ungrouped jobs only.)"""
-    sc = edges.sparkSession.sparkContext
-    caller = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"driver-tier edge probe: collect <= {cap} edges")
-    try:
-        tbl = (
-            edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-            .limit(cap + 1)
-            .toArrow()
-        )
-    finally:
-        sc.setLocalProperty("spark.job.description", caller)
-    if tbl.num_rows > cap:
+def _collect_edges(edges: DataFrame, src: str, dst: str):
+    """The driver tiers' edge probe: ``(s_list, d_list)``, or ``None``
+    when there are more than ``DRIVER_EDGE_CAP`` edges or any endpoint
+    is null (the distributed join semantics handle nulls; the driver
+    tier does not reproduce them)."""
+    cols = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    tbl = bounded_collect(cols, DRIVER_EDGE_CAP, "edge")
+    if tbl is None:
         return None
     s, d = tbl.column("_s"), tbl.column("_d")
     if s.null_count or d.null_count:
@@ -369,24 +347,24 @@ def pagerank_fixed_point(
     upgrades the edge materialization to a reliable checkpoint (see
     ``_truncate_lineage``).
 
-    Size-adaptive (round-11): when the edge list fits under
-    ``PAGERANK_DRIVER_EDGE_CAP`` rows it is collected once (same bounded
-    take as ``connected_components``' union-find path) and the identical
-    integer recurrence runs in numpy on the driver — every step is long
-    addition/multiplication and floor division on non-negative values,
-    so the driver result is bit-identical BY CONSTRUCTION, not merely
-    within a rounding band. This replaces the edge/deg/rank
-    checkpoints, the count job, and the ``iterations``-deep join chain
-    (~2.1 s of driver-synchronous materialization at sf0.1,
-    tools/profile_query.py) with one collect. Larger graphs keep the
-    distributed loop.
+    Size-adaptive (round-11): when the edge list has at most
+    ``DRIVER_EDGE_CAP`` rows and no ``checkpoint_dir`` is given, it is
+    collected once (the same edge probe as ``connected_components``'
+    union-find path) and the identical integer recurrence runs in numpy
+    on the driver — every step is long addition/multiplication and floor
+    division on non-negative values, so the driver result is
+    bit-identical BY CONSTRUCTION, not merely within a rounding band.
+    This replaces the edge/deg/rank checkpoints, the count job, and the
+    ``iterations``-deep join chain (~2.1 s of driver-synchronous
+    materialization at sf0.1, tools/profile_query.py) with one collect.
+    Larger graphs keep the distributed loop; tests set
+    ``DRIVER_EDGE_CAP`` to 0 to force it.
     """
-    if PAGERANK_DRIVER_EDGE_CAP > 0 and checkpoint_dir is None:
-        got = _collect_edges(edges, src, dst, PAGERANK_DRIVER_EDGE_CAP)
-        if got is not None:
-            return _pagerank_driver(
-                edges, got[0], got[1], iterations, int(damping_pct), base, src, dst
-            )
+    got = None if checkpoint_dir is not None else _collect_edges(edges, src, dst)
+    if got is not None:
+        return _pagerank_driver(
+            edges, got[0], got[1], iterations, int(damping_pct), base, src, dst
+        )
     # Materialize the edge list ONCE before iterating: every round joins
     # it, and so do nodes/deg — without this the edge lineage (often an
     # expensive derivation, e.g. the Apriori pair mine feeding

@@ -51,7 +51,7 @@ def _build_jpeg_codec(force_scalar=False):
     """Build the codec as self-contained closures (see module docstring).
 
     Vectorization (round-5 verdict "What's wrong #1", the Arrow-kNN
-    kernel discipline): when numpy is importable, the batch-parallel
+    kernel discipline): unless ``force_scalar`` is set, the batch-parallel
     stages run vectorized — block extraction (strided reshape), constant-
     block classification + exact integer DC quantization, per-scan
     zigzag gathers and all-zero-band detection for the progressive AC
@@ -68,10 +68,8 @@ def _build_jpeg_codec(force_scalar=False):
     import math
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
+    import numpy as _np
+
     np = None if force_scalar else _np
 
     ZZ = (

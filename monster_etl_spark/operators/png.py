@@ -1,4 +1,4 @@
-"""PNG codec in pure stdlib Python — the full common-web subset.
+"""PNG codec in Python and numpy — the full common-web subset.
 
 Supersedes the first-round inline decoder (which handled 8-bit
 non-interlaced gray/RGB/GA/RGBA only) with everything the PNG spec's
@@ -29,83 +29,26 @@ workers).
 from __future__ import annotations
 
 
-def _build_png_codec(force_scalar=False):
-    """Build the codec closures. When numpy is importable (and
-    ``force_scalar`` is not set), the batch-parallel stages run
-    vectorized with EXACT integer arithmetic — scanline unfilter for
-    types None/Sub/Up (uint8 adds wrap mod 256 like the scalar ``& 0xFF``;
-    Sub is a per-lane ``np.add.accumulate``), sub-byte sample unpacking
-    (``np.unpackbits`` + grouped weights), Adam7 pass scatter (strided
-    assignment), palette expansion (fancy indexing) and gray scaling
-    (``v * 255 // maxv`` vectorized). Average/Paeth rows have a true
-    left-neighbor data dependency and stay scalar (this repo's encoder
-    emits filter 0 only, so fixture streams never hit them). Byte parity
-    with the stdlib path is asserted in tests/test_codec_parity.py."""
+def _build_png_codec():
+    """Build the codec closures. The batch-parallel stages run in numpy
+    with EXACT integer arithmetic — scanline unfilter for types
+    None/Sub/Up (uint8 adds wrap mod 256; Sub is a per-lane
+    ``np.add.accumulate``), sub-byte sample unpacking (``np.unpackbits``
+    + grouped weights), Adam7 pass scatter (strided assignment), palette
+    expansion (fancy indexing) and gray scaling (``v * 255 // maxv``).
+    Average/Paeth rows have a true left-neighbor data dependency and run
+    a per-byte loop (this repo's encoder emits filter 0 only; hand-built
+    streams in tests/test_multimodal.py cover all five filters)."""
     import struct
     import zlib
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
-    np = None if force_scalar else _np
+    import numpy as np
 
     # Adam7 pass geometry: (x0, y0, dx, dy)
     ADAM7 = (
         (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
         (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
     )
-
-    def _unfilter(raw, off, pw, ph, bpp, stride):
-        """Reverse scanline filters for one (sub-)image of ``ph`` rows of
-        ``stride`` bytes; ``bpp`` is the byte offset to the left
-        neighbor (max(1, bits_per_pixel // 8)). Returns rows or None."""
-        rows = []
-        prev = bytearray(stride)
-        for y in range(ph):
-            rs = off + y * (stride + 1)
-            ftype = raw[rs]
-            line = bytearray(raw[rs + 1 : rs + 1 + stride])
-            if len(line) != stride:
-                return None
-            if ftype == 1:  # Sub
-                for x in range(bpp, stride):
-                    line[x] = (line[x] + line[x - bpp]) & 0xFF
-            elif ftype == 2:  # Up
-                for x in range(stride):
-                    line[x] = (line[x] + prev[x]) & 0xFF
-            elif ftype == 3:  # Average
-                for x in range(stride):
-                    a = line[x - bpp] if x >= bpp else 0
-                    line[x] = (line[x] + ((a + prev[x]) >> 1)) & 0xFF
-            elif ftype == 4:  # Paeth
-                for x in range(stride):
-                    a = line[x - bpp] if x >= bpp else 0
-                    c = prev[x - bpp] if x >= bpp else 0
-                    p = a + prev[x] - c
-                    pa, pb, pc = abs(p - a), abs(p - prev[x]), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (prev[x] if pb <= pc else c)
-                    line[x] = (line[x] + pred) & 0xFF
-            elif ftype != 0:
-                return None
-            rows.append(line)
-            prev = line
-        return rows
-
-    def _unpack_row(line, w, depth, channels):
-        """Filtered bytes -> per-pixel sample tuples (one entry per
-        pixel, each a tuple of ``channels`` ints, unscaled)."""
-        if depth == 8:
-            return [tuple(line[i * channels : (i + 1) * channels]) for i in range(w)]
-        # sub-byte: single-channel only (gray or palette index), MSB-first
-        per = 8 // depth
-        m = (1 << depth) - 1
-        out = []
-        for i in range(w):
-            byte = line[i // per]
-            shift = (per - 1 - i % per) * depth
-            out.append(((byte >> shift) & m,))
-        return out
 
     def decode(b):
         try:
@@ -114,9 +57,8 @@ def _build_png_codec(force_scalar=False):
             return None
 
     def _parse(b):
-        """Header + chunk walk shared by the scalar and numpy decoders:
-        (width, height, depth, ctype, channels, interlace, plte, raw)
-        or None."""
+        """Header + chunk walk: (width, height, depth, ctype, channels,
+        interlace, plte, raw) or None."""
         if len(b) < 33 or b[:8] != b"\x89PNG\r\n\x1a\n" or b[12:16] != b"IHDR":
             return None
         width = int.from_bytes(b[16:20], "big")
@@ -150,12 +92,13 @@ def _build_png_codec(force_scalar=False):
         raw = zlib.decompress(bytes(idat))
         return width, height, depth, ctype, channels, interlace, plte, raw
 
-    def _unfilter_np(raw, off, pw, ph, bpp, stride):
-        """Vectorized unfilter for one (sub-)image: types 0/2 are whole-
-        row uint8 adds (wrap == the scalar's ``& 0xFF``), type 1 is a
-        per-lane modular prefix sum; types 3/4 (left-neighbor data
-        dependency) run the scalar loop on that row. Output rows are
-        byte-identical to ``_unfilter``."""
+    def _unfilter(raw, off, pw, ph, bpp, stride):
+        """Reverse scanline filters for one (sub-)image of ``ph`` rows of
+        ``stride`` bytes; ``bpp`` is the byte offset to the left
+        neighbor (max(1, bits_per_pixel // 8)). Types 0/2 are whole-row
+        uint8 adds (wrapping mod 256), type 1 is a per-lane modular
+        prefix sum; types 3/4 (left-neighbor data dependency) run a
+        per-byte loop on that row. Returns a (ph, stride) array or None."""
         rows_out = np.empty((ph, stride), np.uint8)
         prev = np.zeros(stride, np.uint8)
         for y in range(ph):
@@ -200,7 +143,10 @@ def _build_png_codec(force_scalar=False):
             prev = cur
         return rows_out
 
-    def _decode_np(parsed):
+    def _decode(b):
+        parsed = _parse(b)
+        if parsed is None:
+            return None
         width, height, depth, ctype, channels, interlace, plte, raw = parsed
         bits = depth * channels
         bpp = max(1, bits // 8)
@@ -214,7 +160,7 @@ def _build_png_codec(force_scalar=False):
             if pw <= 0 or ph <= 0:
                 continue
             stride = (pw * bits + 7) // 8
-            rows = _unfilter_np(raw, off, pw, ph, bpp, stride)
+            rows = _unfilter(raw, off, pw, ph, bpp, stride)
             if rows is None:
                 return None
             off += ph * (stride + 1)
@@ -251,64 +197,6 @@ def _build_png_codec(force_scalar=False):
             return width, height, 1, scaled.tobytes()
         return width, height, channels, target.tobytes()
 
-    def _decode(b):
-        parsed = _parse(b)
-        if parsed is None:
-            return None
-        if np is not None:
-            return _decode_np(parsed)
-        width, height, depth, ctype, channels, interlace, plte, raw = parsed
-
-        bits = depth * channels
-        bpp = max(1, bits // 8)
-        passes = ADAM7 if interlace else ((0, 0, 1, 1),)
-        # pixels[y][x] -> sample tuple
-        pixels = [[None] * width for _ in range(height)]
-        off = 0
-        for x0, y0, dx, dy in passes:
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            stride = (pw * bits + 7) // 8
-            rows = _unfilter(raw, off, pw, ph, bpp, stride)
-            if rows is None:
-                return None
-            off += ph * (stride + 1)
-            for ry, line in enumerate(rows):
-                samples = _unpack_row(line, pw, depth, channels)
-                y = y0 + ry * dy
-                for rx, s in enumerate(samples):
-                    pixels[y][x0 + rx * dx] = s
-        if off != len(raw):
-            return None
-        if any(s is None for row in pixels for s in row):
-            return None
-
-        if ctype == 3:
-            npal = len(plte) // 3
-            out = bytearray(width * height * 3)
-            p = 0
-            for row in pixels:
-                for (v,) in row:
-                    if v >= npal:
-                        return None
-                    out[p : p + 3] = plte[3 * v : 3 * v + 3]
-                    p += 3
-            return width, height, 3, bytes(out)
-        if depth < 8:  # single-channel gray, scale to 8-bit
-            maxv = (1 << depth) - 1
-            return width, height, 1, bytes(
-                v * 255 // maxv for row in pixels for (v,) in row
-            )
-        out = bytearray(width * height * channels)
-        p = 0
-        for row in pixels:
-            for s in row:
-                out[p : p + channels] = bytes(s)
-                p += channels
-        return width, height, channels, bytes(out)
-
     def encode_gray8(pixels, width, interlace=False):
         pixels = bytes(pixels)
         h = max(1, -(-len(pixels) // width))
@@ -326,7 +214,7 @@ def _build_png_codec(force_scalar=False):
             raw = b"".join(
                 b"\x00" + padded[y * width : (y + 1) * width] for y in range(h)
             )
-        elif np is not None:
+        else:
             arr = np.frombuffer(padded, np.uint8).reshape(h, width)
             parts = []
             for x0, y0, dx, dy in ADAM7:
@@ -336,20 +224,6 @@ def _build_png_codec(force_scalar=False):
                     continue
                 sub = arr[y0::dy, x0::dx]
                 parts.extend(b"\x00" + sub[ry].tobytes() for ry in range(ph))
-            raw = b"".join(parts)
-        else:
-            parts = []
-            for x0, y0, dx, dy in ADAM7:
-                pw = (width - x0 + dx - 1) // dx
-                ph = (h - y0 + dy - 1) // dy
-                if pw <= 0 or ph <= 0:
-                    continue
-                for ry in range(ph):
-                    y = y0 + ry * dy
-                    parts.append(
-                        b"\x00"
-                        + bytes(padded[y * width + x0 + rx * dx] for rx in range(pw))
-                    )
             raw = b"".join(parts)
         ihdr = struct.pack(">IIBBBBB", width, h, 8, 0, 0, 0, 1 if interlace else 0)
         return (
@@ -362,7 +236,6 @@ def _build_png_codec(force_scalar=False):
     return {
         "decode": decode,
         "encode_gray8": encode_gray8,
-        "_unfilter": _unfilter,
     }
 
 

@@ -14,11 +14,10 @@ summation strategies and oracle-checkable in DuckDB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from monster_etl_spark.localrel import bounded_collect
 from monster_etl_spark.operators.partitioning import spread as _spread
 from monster_etl_spark.pyworkers import map_in_pandas
 from monster_etl_spark.sql import quote_ident
@@ -290,10 +289,11 @@ IVF_KMEANS_ITERS = 3
 # and empty-cell dropout replicate the struct-ordering semantics, so the
 # centroids are the same values the distributed loop emits (oracle-gated
 # at every driver sf). Same size-adaptive precedent as
-# connected_components' driver_threshold and the OPQ sample collect; the
-# cap bounds driver memory (131072 x 64 doubles = 67 MB) and large
-# corpora keep the distributed loop. 0 disables the driver tier.
-KMEANS_DRIVER_FIT_CAP = int(os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_FIT_CAP", "131072"))
+# graph.DRIVER_EDGE_CAP and the OPQ sample collect; the cap bounds driver
+# memory (131072 x 64 doubles = 67 MB) and large corpora keep the
+# distributed loop. Read at call time; tests set it to 0 to force the
+# distributed loop.
+KMEANS_DRIVER_FIT_CAP = 131_072
 
 # Width cap for the fixed-dimension wide-aggregate mean fast path in the
 # Lloyd loops (kmeans_centroids / pq_codebooks). d parallel avg() buffers
@@ -467,20 +467,22 @@ def _left_fold():
 _fold = _left_fold()
 
 
-def _collect_fit_rows(df: DataFrame, id_name: str, vec_name: str, cap: int):
-    """ONE-job bounded Arrow collect of a fit set: ``(ids, V)`` sorted by
-    id, or ``None`` when the set exceeds ``cap`` rows or is ragged (the
-    distributed loop handles both). The vectors are collected AFTER all
-    Spark-side derivation (double cast / unit normalization), so the
-    driver sees bit-identical doubles."""
+def _collect_fit_rows(df: DataFrame, label: str):
+    """The driver Lloyd fits' probe over a ``(cid, v)`` fit set: ``(ids,
+    V)`` sorted by id, or ``None`` when the set exceeds
+    ``KMEANS_DRIVER_FIT_CAP`` rows or is ragged (the distributed loop
+    handles both). The vectors are collected AFTER all Spark-side
+    derivation (double cast / unit normalization), so the driver sees
+    bit-identical doubles."""
     import numpy as np
 
-    tbl = df.select(
-        F.col(id_name).alias("_fid"), F.col(vec_name).alias("_fv")
-    ).limit(cap + 1).toArrow()
+    cols = df.select(F.col("cid").alias("_fid"), F.col("v").alias("_fv"))
+    tbl = bounded_collect(cols, KMEANS_DRIVER_FIT_CAP, label)
+    if tbl is None:
+        return None
     n = tbl.num_rows
-    if n == 0 or n > cap:
-        return None if n else ([], None)
+    if n == 0:
+        return [], None
     col = tbl.column("_fv").combine_chunks()
     if col.null_count:
         # null VECTORS: the distributed paths drop them (filter /
@@ -695,13 +697,10 @@ def kmeans_centroids(
     # loop's parallelism, not for a single funnel-to-driver job).
     # Oversized or ragged fit sets fall through to the distributed loop
     # unchanged.
-    if KMEANS_DRIVER_FIT_CAP > 0:
-        got = _collect_fit_rows(_prep(base), "cid", "v", KMEANS_DRIVER_FIT_CAP)
-        if got is not None:
-            ids, V = got
-            return _kmeans_driver_fit(
-                corpus.sparkSession, ids, V, n_centroids, iters
-            )
+    got = _collect_fit_rows(_prep(base), "k-means fit")
+    if got is not None:
+        ids, V = got
+        return _kmeans_driver_fit(corpus.sparkSession, ids, V, n_centroids, iters)
     v = _prep(_spread(base))
     dim = None
     if iters > 0:
@@ -1960,18 +1959,13 @@ def pq_codebooks(
     # sub-sliced in numpy (slicing moves no arithmetic), so the ~15
     # probe/broadcast/checkpoint jobs of the distributed subspace loop
     # collapse to one. Oversized/ragged fit sets keep the loop.
-    if KMEANS_DRIVER_FIT_CAP > 0:
-        got = _collect_fit_rows(
-            corpus_fit.select(
-                F.col(id_col).alias("cid"), _as_double(vec_col).alias("v")
-            ),
-            "cid",
-            "v",
-            KMEANS_DRIVER_FIT_CAP,
-        )
-        if got is not None:
-            ids, V = got
-            return _pq_driver_fit(corpus.sparkSession, ids, V, m, n_codes, iters)
+    got = _collect_fit_rows(
+        corpus_fit.select(F.col(id_col).alias("cid"), _as_double(vec_col).alias("v")),
+        "PQ fit",
+    )
+    if got is not None:
+        ids, V = got
+        return _pq_driver_fit(corpus.sparkSession, ids, V, m, n_codes, iters)
     sub = _spread(_sub_rows(corpus_fit, id_col, vec_col, m))
     dim = None
     if iters > 0:

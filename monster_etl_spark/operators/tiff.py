@@ -32,8 +32,8 @@ from __future__ import annotations
 
 
 def _build_tiff_codec(force_scalar=False):
-    """Build the codec closures. With numpy importable (and not
-    ``force_scalar``), the batch stages vectorize with exact integer
+    """Build the codec closures. Without
+    ``force_scalar``, the batch stages vectorize with exact integer
     arithmetic: LZW code extraction (MSB-first bit unpack + per-batch
     integer matmul between the deterministic early-change width
     boundaries — the same horizon argument as the GIF decoder, shifted
@@ -45,10 +45,8 @@ def _build_tiff_codec(force_scalar=False):
     tests/test_codec_parity.py."""
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
+    import numpy as _np
+
     np = None if force_scalar else _np
 
     CLEAR, EOI, FIRST = 256, 257, 258

@@ -46,8 +46,8 @@ from functools import lru_cache
 
 @lru_cache(maxsize=None)
 def _build_wav_codec(force_scalar=False):
-    """Build the codec closures. With numpy importable (and not
-    ``force_scalar``), the sample-parallel stages vectorize with exact
+    """Build the codec closures. Without
+    ``force_scalar``, the sample-parallel stages vectorize with exact
     integer arithmetic: G.711 decode is a 256-entry ``np.take`` LUT and
     G.711 *encode* a 65536-entry LUT built from the scalar segment
     encoders (table lookup == the function, by construction); PCM
@@ -58,10 +58,8 @@ def _build_wav_codec(force_scalar=False):
     stdlib build is asserted in tests/test_codec_parity.py."""
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
+    import numpy as _np
+
     np = None if force_scalar else _np
 
     # ---- G.711 (ITU-T; tables identical to Sun g711.c / CPython audioop) --

@@ -61,10 +61,8 @@ def _build_webp_codec(force_scalar: bool = False):
     import struct
     from heapq import heapify, heappop, heappush
 
-    try:
-        import numpy as _np_mod
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np_mod = None
+    import numpy as _np_mod
+
     np = None if force_scalar else _np_mod
 
     # kCodeLengthCodeOrder — the permutation in which the 3-bit lengths

@@ -122,12 +122,7 @@ def get_spark(
         # Batch shuffles do NOT inherit this number: AQE starts them at
         # `initialPartitionNum` (below) and coalesces to ~advisory-sized
         # partitions, so big sorts/joins are sized by bytes, not by cores.
-        # SPARK_GRAFT_SHUFFLE_PARTITIONS still overrides both for soaks.
-        env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env_sp:
-            shuffle_partitions = int(env_sp)
-        else:
-            shuffle_partitions = cores
+        shuffle_partitions = cores
     # Scale-adaptive shuffle sizing ON BY DEFAULT (round-4 finding: the
     # per-core default OOMs an 8g heap at sf100 — 32 partitions x 19M rows
     # per sort task — and spill-drags the contamination join 2.2x; see

@@ -81,8 +81,7 @@ def test_dib_roundtrip_flip_and_stride():
 
 
 def test_dib_tolerates_overlength_frames():
-    """The per-pixel scalar walk always truncated padded/oversized frames
-    to width*height; the vectorized stack path must keep that tolerance
+    """Padded/oversized frames are truncated to width*height
     (np.frombuffer(count=...)) instead of raising on non-uniform lengths."""
     from monster_etl_spark.operators.avi import avi_encode_dib, avi_frames_ex
 

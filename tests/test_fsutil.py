@@ -236,21 +236,24 @@ def test_object_store_rename_is_copy_delete(spark, tmp_path, s3copy):
     assert not (tmp_path / "renamed.txt").exists()
 
 
-def test_reliable_checkpoint_through_object_store_scheme(spark, tmp_path, s3copy):
+def test_reliable_checkpoint_through_object_store_scheme(
+    spark, tmp_path, s3copy, monkeypatch
+):
     """connected_components' reliable checkpoint_dir knob driven through
     the copy+delete-rename filesystem end to end: the distributed
-    min-label loop (driver_threshold=0) truncates lineage into
+    min-label loop (DRIVER_EDGE_CAP=0) truncates lineage into
     s3copy:// and must still converge to the right components."""
+    from monster_etl_spark.operators import graph
     from monster_etl_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(graph, "DRIVER_EDGE_CAP", 0)
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
         "doc_a: long, doc_b: long",
     )
     ck = s3copy(tmp_path / "ckpt")
-    comps = connected_components(
-        pairs, driver_threshold=0, checkpoint_dir=ck, max_iter=10
-    )
+    comps = connected_components(pairs, checkpoint_dir=ck, max_iter=10)
     got = {(r.node, r.component) for r in comps.collect()}
     want = {
         (1, 1), (2, 1), (3, 1),

@@ -6,6 +6,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from monster_etl_spark.operators import graph
 from monster_etl_spark.operators.graph import connected_components, dedup_survivors
 
 
@@ -34,51 +35,54 @@ def _uf_components(edges, nodes):
     return out
 
 
-def _check(spark, edges):
+def _check(spark, monkeypatch, edges):
     nodes = sorted({x for e in edges for x in e})
     expected = _uf_components(edges, nodes)
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
     # both the driver union-find fast path and the distributed propagation
     # path must produce the identical min-label result
     got_fast = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
-    got_dist = {
-        r["node"]: r["component"]
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(graph, "DRIVER_EDGE_CAP", 0)
+    got_dist = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
     assert got_fast == expected
     assert got_dist == expected
 
 
-def test_two_triangles_and_a_chain(spark):
-    _check(spark, [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (20, 21), (21, 22), (22, 23)])
+def test_two_triangles_and_a_chain(spark, monkeypatch):
+    _check(
+        spark,
+        monkeypatch,
+        [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (20, 21), (21, 22), (22, 23)],
+    )
 
 
-def test_long_chain(spark):
+def test_long_chain(spark, monkeypatch):
     # worst case for label propagation: diameter = n
-    _check(spark, [(i, i + 1) for i in range(0, 15)])
+    _check(spark, monkeypatch, [(i, i + 1) for i in range(0, 15)])
 
 
-def test_random_graph_matches_union_find(spark):
+def test_random_graph_matches_union_find(spark, monkeypatch):
     rng = random.Random(42)
     nodes = list(range(100))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(80)]
     edges = [(a, b) for a, b in edges if a != b]
-    _check(spark, edges)
+    _check(spark, monkeypatch, edges)
 
 
-def test_null_endpoint_same_rows_on_both_tiers(spark):
+def test_null_endpoint_same_rows_on_both_tiers(spark, monkeypatch):
     """A NULL endpoint sends the default call to the distributed loop
     (the driver union-find cannot order NULL against ids), so both calls
     give the components plus the one ``(NULL, NULL)`` row."""
     pairs = spark.createDataFrame([(1, 2), (2, None), (3, 4)], "doc_a bigint, doc_b bigint")
     want = [(None, None), (1, 1), (2, 1), (3, 3), (4, 3)]
 
-    def rows(**kw):
-        got = connected_components(pairs, **kw).collect()
+    def rows():
+        got = connected_components(pairs).collect()
         return sorted((tuple(r) for r in got), key=lambda t: (t[0] is not None, t))
 
     assert rows() == want
-    assert rows(driver_threshold=0) == want
+    monkeypatch.setattr(graph, "DRIVER_EDGE_CAP", 0)
+    assert rows() == want
 
 
 def test_dedup_survivors(spark):
@@ -89,7 +93,7 @@ def test_dedup_survivors(spark):
     assert kept == [0, 3, 4]
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """checkpoint_dir knob: the distributed min-label path with a RELIABLE
     checkpoint (file:/ here; HDFS/object store on a cluster) must produce
     the same components as the default localCheckpoint path, and must
@@ -103,15 +107,11 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)], "doc_a: long, doc_b: long"
     )
     ckpt = str(tmp_path / "ckpt")
-    local = {
-        (r.node, r.component)
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(graph, "DRIVER_EDGE_CAP", 0)
+    local = {(r.node, r.component) for r in connected_components(pairs).collect()}
     reliable = {
         (r.node, r.component)
-        for r in connected_components(
-            pairs, driver_threshold=0, checkpoint_dir=ckpt
-        ).collect()
+        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
     }
     assert reliable == local
     assert {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)} <= reliable
@@ -164,23 +164,36 @@ def test_bfs_hops_chain_cycle_and_bounds(spark):
 
 
 def test_driver_tier_probe_names_its_jobs(spark):
-    """Both driver tiers' bounded edge collect runs under a job
-    description naming the probe and its cap, then restores the
+    """Every driver tier's bounded collect (the edge probe of PageRank
+    and connected components, the k-means and PQ fit probes) runs under
+    a job description naming the probe and its cap, then restores the
     caller's description."""
     from monster_etl_spark import metrics
+    from monster_etl_spark.operators import similarity as sim
     from monster_etl_spark.operators.graph import pagerank_fixed_point
 
     sc = spark.sparkContext
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
     pairs = spark.createDataFrame([(1, 2), (3, 4)], "doc_a long, doc_b long")
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5), 0.5]) for i in range(12)],
+        "vec_id long, embedding array<float>",
+    )
+    probes = [
+        ("edge", lambda: pagerank_fixed_point(edges)),
+        ("edge", lambda: connected_components(pairs)),
+        ("k-means fit", lambda: sim.kmeans_centroids(emb, n_centroids=2)),
+        ("PQ fit", lambda: sim.pq_codebooks(emb, m=2, n_codes=2)),
+    ]
     sc.setJobDescription("caller")
     try:
-        for build in (lambda: pagerank_fixed_point(edges), lambda: connected_components(pairs)):
+        for label, build in probes:
             before = metrics.snapshot(spark)
             build()
             jobs = metrics.jobs(before, metrics.snapshot(spark))
             assert jobs
-            assert all(j["desc"].startswith("driver-tier edge probe: collect <= ") for j in jobs)
+            prefix = f"driver-tier {label} probe: collect <= "
+            assert all(j["desc"].startswith(prefix) for j in jobs), (label, jobs)
             assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.job.description", None)

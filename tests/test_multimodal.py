@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from monster_etl_spark.operators import multimodal as mm
+from monster_etl_spark.operators.png import png_full_decode
 
 
 @pytest.fixture(scope="module")
@@ -303,15 +304,20 @@ def _png_with_filters(width, height, channels, pixels, ftypes):
     )
 
 
-@pytest.mark.parametrize("channels", [1, 2, 3, 4])
-def test_png_decode_all_filters_roundtrip(channels):
+@pytest.mark.parametrize(
+    "decode,channels",
+    [pytest.param(mm.png_decode, c, id=str(c)) for c in (1, 2, 3, 4)]
+    + [pytest.param(png_full_decode, c, id=f"full-{c}") for c in (1, 2, 3, 4)],
+)
+def test_png_decode_all_filters_roundtrip(decode, channels):
     """Every scanline filter (None/Sub/Up/Average/Paeth) and every
-    supported color type must decode back to the exact original pixels."""
+    supported color type must decode back to the exact original pixels,
+    in the inline decoder and in the full decoder of operators/png.py."""
     width, height = 7, 5
     stride = width * channels
     pixels = bytes((i * 37 + 11) % 256 for i in range(stride * height))
     blob = _png_with_filters(width, height, channels, pixels, ftypes=[0, 1, 2, 3, 4])
-    got = mm.png_decode(blob)
+    got = decode(blob)
     assert got is not None
     w, h, ch, px = got
     assert (w, h, ch) == (width, height, channels)

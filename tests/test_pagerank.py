@@ -3,6 +3,9 @@ straightforward pure-Python fixed-point evaluation exactly (that's the
 whole point of integer arithmetic — no tolerance, bit equality), and the
 known structure of a star graph must rank the hub first."""
 
+import pytest
+
+from monster_etl_spark.operators import graph
 from monster_etl_spark.operators.graph import pagerank_fixed_point
 
 BASE = 10**12
@@ -24,8 +27,14 @@ def _reference(edges, iterations=5, d=85):
     return rank
 
 
-def test_pagerank_matches_reference_exactly(spark):
-    # asymmetric directed graph incl. a dangling node (4 has no out-edges)
+@pytest.mark.parametrize(
+    "cap", [graph.DRIVER_EDGE_CAP, 0], ids=["driver", "distributed"]
+)
+def test_pagerank_matches_reference_exactly(spark, monkeypatch, cap):
+    # both tiers (numpy on the driver, and the distributed join loop that
+    # a zero cap forces) on an asymmetric directed graph incl. a dangling
+    # node (4 has no out-edges)
+    monkeypatch.setattr(graph, "DRIVER_EDGE_CAP", cap)
     edges = [(1, 2), (1, 3), (2, 3), (3, 1), (2, 4), (5, 3), (3, 4)]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {r["node"]: r["rank_fp"] for r in pagerank_fixed_point(df).collect()}

@@ -118,3 +118,18 @@ def test_deep_tmpdir_keeps_socket_paths_short_and_dir_goes_at_exit(tmp_path):
         assert not os.path.exists(sock_dir)
     else:
         assert sock_dir is None
+
+
+def test_env_knobs_are_cpus_and_scratch_dir():
+    """The package reads two environment knobs, the core count and the
+    scratch root; a new one has to change this test."""
+    import re
+
+    pkg = os.path.join(REPO, "monster_etl_spark")
+    names = set()
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(root, f), encoding="utf-8") as fh:
+                    names.update(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", fh.read()))
+    assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_SCRATCH_DIR"}

@@ -98,12 +98,12 @@ def test_token_pagerank_probe_plans_pair_mining_once(spark, sf_dir, monkeypatch)
     every stage while the plan was built."""
     probed = []
 
-    def spy(edges, src, dst, cap):
-        probed.append(edges)
-        return collect_edges(edges, src, dst, cap)
+    def spy(df, cap, label):
+        probed.append(df)
+        return bounded_collect(df, cap, label)
 
-    collect_edges = graph._collect_edges
-    monkeypatch.setattr(graph, "_collect_edges", spy)
+    bounded_collect = graph.bounded_collect
+    monkeypatch.setattr(graph, "bounded_collect", spy)
     reg = all_queries()
     reg["text_token_pagerank"].fn(spark, sf_dir)
     assert len(probed) == 1

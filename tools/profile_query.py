@@ -9,8 +9,9 @@ query it prints:
   warm build, then the best of 2 builds;
 - after ``--runs`` warm runs (guide §1.4 noop sink), one row per Spark job
   the timed run launched — job id, duration, stage ids, tasks and
-  description (the query's name, or the driver-tier probe that launched
-  the job) — read from Spark's in-process status store
+  description (the query's name, or ``driver-tier <label> probe: collect
+  <= <cap> rows`` for the jobs of a driver tier's bounded probe: edge,
+  k-means fit or PQ fit) — read from Spark's in-process status store
   (``monster_etl_spark.metrics``), so the per-action overhead (Lloyd
   rounds, lineage checkpoints, vocabulary collects) is measured instead
   of guessed;
@@ -71,8 +72,9 @@ def main() -> None:
     build_total = 0.0
     for name in names:
         fn = registry[name].fn
-        # names the query's jobs, AQE's included (a driver-tier probe
-        # inside it labels its own jobs, then restores this label)
+        # names the query's jobs, AQE's included (localrel.bounded_collect,
+        # every driver tier's probe, labels its own jobs, then restores
+        # this label)
         spark.sparkContext.setJobDescription(name)
         # the warm build reads the parquet footers and schema memo, so the
         # timed builds measure this query's own expression construction
